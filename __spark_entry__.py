@@ -1,6 +1,6 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry(spark)`` runs the flagship job: the full mapInPandas extraction
+``entry(spark)`` runs the flagship job: the full mapInArrow extraction
 kernel over interleaved docs built from /root/testdata/sf0.001 documents,
 returning the flat span rows.
 

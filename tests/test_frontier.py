@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from wikicrawler_spark import corpus
-from wikicrawler_spark.bloom import BloomFilter, build_bloom
+from wikicrawler_spark.bloom import NativeBloom
 from wikicrawler_spark.extract_job import links_of, run_extract
 from wikicrawler_spark.frontier import crawl
 
@@ -134,25 +134,45 @@ def test_links_of_extraction(spark, graph_df):
 
 # ---------------------------------------------------------------- bloom
 
-def test_bloom_no_false_negatives():
-    bf = BloomFilter(1000)
-    items = [f"wiki/x_{i}" for i in range(1000)]
-    bf.add_many(items)
-    assert all(bf.might_contain(i) for i in items)
+def _ids_df(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "doc_id string")
 
 
-def test_bloom_fpr_reasonable():
-    bf = BloomFilter(1000, fpr=0.01)
-    bf.add_many(f"wiki/x_{i}" for i in range(1000))
-    fresh = [f"wiki/y_{i}" for i in range(10000)]
-    fp = int(sum(bf.contains_array(fresh)))
+def test_bloom_no_false_negatives(spark):
+    items = _ids_df(spark, [f"wiki/x_{i}" for i in range(1000)])
+    bf = NativeBloom(1000).merge_from(items, "doc_id")
+    new, maybe = bf.split(items, "doc_id")
+    assert new.count() == 0
+    assert maybe.count() == 1000
+
+
+def test_bloom_fpr_reasonable(spark):
+    bf = NativeBloom(1000, fpr=0.01).merge_from(
+        _ids_df(spark, [f"wiki/x_{i}" for i in range(1000)]), "doc_id")
+    _, maybe = bf.split(_ids_df(spark, [f"wiki/y_{i}" for i in range(10000)]),
+                        "doc_id")
+    fp = maybe.count()
     assert fp < 500  # ~1% expected; generous bound
 
 
 def test_distributed_bloom_build(spark):
     df = spark.range(2000).selectExpr("concat('wiki/z_', id) as doc_id").repartition(7)
-    bf = build_bloom(df, "doc_id", 2000)
-    assert all(bf.might_contain(f"wiki/z_{i}") for i in range(2000))
+    bf = NativeBloom(2000).merge_from(df, "doc_id")
+    new, maybe = bf.split(df, "doc_id")
+    assert new.count() == 0
+    assert maybe.count() == 2000
+
+
+def test_bloom_sign_bit_word(spark):
+    """A key that sets bit 63 of a word (a negative bigint in Spark) must
+    merge into the uint64 bitmap without overflow and probe as seen."""
+    bf = NativeBloom(1)  # one 64-bit word
+    key = _ids_df(spark, ["wiki/sign_bit_2"])
+    bf.merge_from(key, "doc_id")
+    assert int(bf.words[0]) >> 63 == 1
+    new, maybe = bf.split(key, "doc_id")
+    assert new.count() == 0
+    assert maybe.count() == 1
 
 
 def test_hot_skew_fanout(spark):

@@ -263,21 +263,6 @@ def test_spark_partitioning_invariance(spark):
     assert outs[0] == outs[1]
 
 
-def test_arrow_engine_equals_pandas_engine(spark):
-    """extract_spans(engine='arrow') must be identical to the mapInPandas
-    path on every fixture family."""
-    docs = corpus.tiny_corpus()
-    df = spark.createDataFrame(
-        [(d["doc_id"], [tuple(s.values()) for s in d["spans"]]) for d in docs],
-        schema=corpus.DOC_SCHEMA,
-    )
-    a = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-         for r in extract_spans(df, engine="arrow").collect()}
-    p = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-         for r in extract_spans(df, engine="pandas").collect()}
-    assert a == p
-
-
 def test_extract_from_parquet_equals_extract_spans(spark, tmp_path):
     """The scan-fused path (row-group splits read by pyarrow inside the
     Arrow workers) must produce byte-identical spans to the declarative

@@ -1,5 +1,5 @@
 """Property-based kernel invariants (SURVEY.md §5.2 item 5) — pure-python
-``extract_doc`` (the exact function the mapInPandas kernel runs), so
+``extract_doc`` (the per-document form of the mapInArrow kernel), so
 hypothesis can explore thousands of documents without Spark overhead.
 
 Invariants:
@@ -192,11 +192,11 @@ def container_fragment(draw):
                                 hostile_fragment()),
                       min_size=1, max_size=8))
 @settings(max_examples=200, deadline=None)
-def test_memo_and_cscan_equal_python_tokenizer(frags):
-    """The round-3 container-fragment memo AND the C scan loop must each be
-    byte-identical to the plain python tokenizer on adversarial fragment
-    streams (including parser STATE: open-container stack + scope count,
-    which outlive the fragment)."""
+def test_memo_equals_python_tokenizer(frags):
+    """The round-3 container-fragment memo must be byte-identical to the
+    plain python tokenizer on adversarial fragment streams (including
+    parser STATE: open-container stack + scope count, which outlive the
+    fragment)."""
     from wikicrawler_spark import html_tokenizer as H
 
     def run():
@@ -214,14 +214,6 @@ def test_memo_and_cscan_equal_python_tokenizer(frags):
                     p._scope_count))
         return out
 
-    # cscan is opt-in (WCS_CSCAN=1) — force-load it here so the C path
-    # stays property-covered regardless of the env default
-    cscan = H._CSCAN or H._load_cscan()
-    if cscan is not None and not hasattr(H, "_ct"):
-        import ctypes
-        H._ct = ctypes
-    prev = H._CSCAN
-    H._CSCAN = None
     try:
         H.CONTAINER_MEMO = False
         plain = run()
@@ -229,19 +221,13 @@ def test_memo_and_cscan_equal_python_tokenizer(frags):
         H._FRAG_MEMO.clear()
         memo = run()
         assert memo == plain
-        if cscan is not None:
-            H._CSCAN = cscan
-            H.CONTAINER_MEMO = False
-            cpath = run()
-            assert cpath == plain
     finally:
-        H._CSCAN = prev
         H.CONTAINER_MEMO = True
 
 
 @st.composite
 def paragraph_fragment(draw):
-    """Fragments aimed at the C block-assembler's acceptance boundary:
+    """Fragments aimed at the paragraph fast path's acceptance boundary:
     every anchor-attr corner the python fast path's substring gates and
     _parse_attrs semantics create (spaced '=', data-* prefixes, duplicate
     attrs, empty hrefs, class-token variants), plus shapes that must be
@@ -282,24 +268,10 @@ def paragraph_fragment(draw):
                       min_size=1, max_size=6),
        opens=st.booleans())
 @settings(max_examples=250, deadline=None)
-def test_c_assembly_equals_python_paths(frags, opens):
-    """The opt-in C block assembler (WCS_CASSEMBLE) must be byte-identical
-    to the python fast path AND the tree path on adversarial paragraph
-    streams, in and out of content scope. Force-loads the lib so the C
-    path stays covered regardless of the env default; skips only when no
-    compiler is available."""
-    import pytest
-
-    from wikicrawler_spark import html_tokenizer as H
+def test_fast_paragraph_equals_tree_on_paragraph_fragments(frags, opens):
+    """The python paragraph fast path must be byte-identical to the tree
+    path on adversarial paragraph streams, in and out of content scope."""
     from wikicrawler_spark import kernel
-
-    lib = kernel._CASM or H._load_cscan()
-    if lib is None:
-        pytest.skip("no C toolchain in this environment")
-    if not hasattr(kernel, "_ct"):
-        import ctypes
-
-        kernel._ct = ctypes
 
     spans = []
     off = 0
@@ -312,17 +284,11 @@ def test_c_assembly_equals_python_paths(frags, opens):
         spans.append({"kind": "html", "text": f, "media_ref": None,
                       "offset": off + i})
 
-    prev = kernel._CASM
     try:
-        kernel._CASM = lib
         kernel.FAST_PARAGRAPH_PATH = True
-        casm = extract_doc("wiki/adv", spans)
-        kernel._CASM = None
         fast = extract_doc("wiki/adv", spans)
         kernel.FAST_PARAGRAPH_PATH = False
         tree = extract_doc("wiki/adv", spans)
     finally:
-        kernel._CASM = prev
         kernel.FAST_PARAGRAPH_PATH = True
-    assert casm == fast
     assert fast == tree

@@ -1,109 +1,28 @@
-"""Broadcastable Bloom filter with distributed build.
+"""Bloom filter over a DataFrame column, built and probed in the JVM.
 
 Role (SURVEY.md T9 / §4.2): the reference dedups fetches with a per-URL
 SQLite probe (/root/reference/src/wikicrawler/core/grabber.py:169). At
-frontier scale that becomes: Bloom filter broadcast as a CHEAP PRE-FILTER
-that prunes most already-visited doc_ids before the shuffle, with the exact
+frontier scale that becomes a Bloom filter used as a CHEAP PRE-FILTER that
+prunes most already-visited doc_ids before the shuffle, with the exact
 ``left_anti`` join remaining the authority — Bloom false positives would
 otherwise DROP docs, so the filter is only ever used in the
 "definitely-not-visited fast path" direction.
 
-Hashing is BLAKE2b-based (stable across processes/seeds — Python's builtin
+Hashing is xxhash64 (stable across processes/seeds — Python's builtin
 ``hash`` is salted per process and must never be used for data-plane
 hashing). k index functions derive from double hashing h1 + i*h2 (Kirsch &
 Mitzenmacher 2006, public result).
 
-Scale note: bits are sized from the expected visited count at ~1% FPR;
-at 10^12 docs a single monolithic Bloom is ~1.2 TB, so the cap below keeps
-the broadcast bounded and the FPR simply degrades (pre-filter prunes less;
-the exact anti-join still guarantees correctness). A production variant
-would shard the filter by doc_id bucket and broadcast per-bucket.
+Scale note: bits are sized from the expected visited count at ~1% FPR and
+capped so the broadcast bitmap row stays bounded; past the cap the FPR
+simply degrades (pre-filter prunes less; the exact anti-join still
+guarantees correctness). A production variant would shard the filter by
+doc_id bucket and broadcast per-bucket.
 """
 
 import math
-from hashlib import blake2b
 
 import numpy as np
-
-# NOTE: no `from __future__ import annotations` here — pyspark's pandas_udf
-# type-hint resolution needs REAL pd.Series annotations, not strings.
-
-_MAX_BITS = 1 << 30  # 128 MiB broadcast cap (sandbox-friendly)
-
-
-def _hash_pair(item: str) -> tuple[int, int]:
-    d = blake2b(item.encode("utf-8"), digest_size=16).digest()
-    return int.from_bytes(d[:8], "little"), int.from_bytes(d[8:], "little")
-
-
-class BloomFilter:
-    """Bit-array Bloom filter over strings; numpy-backed, picklable."""
-
-    def __init__(self, n_items, fpr=0.01):
-        n_items = max(n_items, 1)
-        n_bits = int(-n_items * math.log(fpr) / (math.log(2) ** 2))
-        self.n_bits = min(max(n_bits, 64), _MAX_BITS)
-        self.k = max(1, round(self.n_bits / n_items * math.log(2)))
-        self.bits = np.zeros(self.n_bits // 8 + 1, dtype=np.uint8)
-
-    def _indices(self, item):
-        h1, h2 = _hash_pair(item)
-        return [(h1 + i * h2) % self.n_bits for i in range(self.k)]
-
-    def add(self, item):
-        for idx in self._indices(item):
-            self.bits[idx >> 3] |= 1 << (idx & 7)
-
-    def add_many(self, items):
-        for it in items:
-            self.add(it)
-        return self
-
-    def might_contain(self, item):
-        return all(self.bits[i >> 3] & (1 << (i & 7)) for i in self._indices(item))
-
-    def contains_array(self, items):
-        return np.fromiter(
-            (self.might_contain(it) for it in items), dtype=bool, count=len(items)
-        )
-
-    def merge(self, other):
-        assert self.n_bits == other.n_bits and self.k == other.k
-        np.bitwise_or(self.bits, other.bits, out=self.bits)
-        return self
-
-
-def build_bloom(df, column, n_items, fpr=0.01, n_bits=None, k=None):
-    """Distributed build: each partition fills a local filter (mapInPandas,
-    Arrow-batched); partial bitarrays are OR-merged on the driver. One pass,
-    no shuffle. Pass (n_bits, k) to build with a FIXED geometry so the
-    result can be merged into an existing filter (frontier.py's incremental
-    per-wave builds)."""
-    import pandas as pd
-
-    proto = BloomFilter(n_items, fpr)
-    if n_bits is not None:
-        proto.n_bits = n_bits
-        proto.k = k
-        proto.bits = np.zeros(n_bits // 8 + 1, dtype=np.uint8)
-    n_bits, k = proto.n_bits, proto.k
-
-    def partial(batches):
-        bf = BloomFilter(1, fpr)
-        bf.n_bits, bf.k = n_bits, k
-        bf.bits = np.zeros(n_bits // 8 + 1, dtype=np.uint8)
-        seen = False
-        for pdf in batches:
-            if len(pdf):
-                seen = True
-                bf.add_many(pdf[column].astype(str))
-        if seen:
-            yield pd.DataFrame({"bits": [bf.bits.tobytes()]})
-
-    parts = df.select(column).mapInPandas(partial, schema="bits binary").collect()
-    for row in parts:
-        proto.bits |= np.frombuffer(row["bits"], dtype=np.uint8)
-    return proto
 
 
 class NativeBloom:
@@ -115,24 +34,22 @@ class NativeBloom:
     Scala-only), so the same machinery is expressed with public functions:
 
       build  xxhash64 double-hashing (Kirsch & Mitzenmacher 2006, like
-             Spark's BloomFilterImpl) -> k bit indices per key -> one
+             Spark's own Bloom filter) -> k bit indices per key -> one
              ``bit_or`` word aggregation (tree-aggregated in the JVM,
              partial aggregation collapses duplicates map-side) -> the
              driver collects only the SET words (sparse; bounded by
              n_bits/64 rows) and ORs them into the bitmap. No Python in
              the data path, no per-partition full-geometry bitsets.
-      probe  k unrolled codegen bit-tests over the bitmap shipped as one
-             array<bigint> literal — whole-stage codegen, no Python
-             worker, no broadcast variable plumbing.
+      probe  k unrolled codegen bit-tests over the bitmap shipped as a
+             one-row array<bigint> broadcast — whole-stage codegen, no
+             Python worker, no broadcast variable plumbing.
 
-    The bitmap literal rides in the task binary, so the geometry cap is
-    tighter than the pickled-python-filter cap (16 MiB vs 128 MiB); past
-    the cap the FPR degrades gracefully and the exact anti-join stays
-    authoritative, exactly as before. Hash family differs from the
-    blake2b python filter — irrelevant, since no-false-negatives is the
-    only contract and the pinned bloom==exact test checks results."""
+    The bitmap is capped at 16 MiB; past the cap the FPR degrades
+    gracefully and the exact anti-join stays authoritative. Words are
+    kept as uint64 on the driver and reinterpreted as signed bigints only
+    when the probe row is built."""
 
-    _MAX_NATIVE_BITS = 1 << 27  # 16 MiB as an array<bigint> plan literal
+    _MAX_NATIVE_BITS = 1 << 27  # 16 MiB as one array<bigint> row
 
     def __init__(self, n_items, fpr=0.01):
         n_items = max(n_items, 1)
@@ -140,7 +57,7 @@ class NativeBloom:
         n_bits = min(max(n_bits, 64), self._MAX_NATIVE_BITS)
         self.n_bits = (n_bits + 63) // 64 * 64  # whole words
         self.k = max(1, round(self.n_bits / n_items * math.log(2)))
-        self.words = np.zeros(self.n_bits // 64, dtype=np.int64)
+        self.words = np.zeros(self.n_bits // 64, dtype=np.uint64)
 
     # h1/h2: two independent xxhash64 streams (the second seeded by an
     # extra literal), each reduced mod n_bits so the unrolled index
@@ -172,7 +89,8 @@ class NativeBloom:
             .collect()
         )
         for r in rows:
-            self.words[r["__w"]] |= np.int64(np.uint64(r["__or"] & (1 << 64) - 1))
+            # bit_or yields a signed bigint: keep its two's-complement bits
+            self.words[r["__w"]] |= np.uint64(r["__or"] & (1 << 64) - 1)
         return self
 
     def _probe_expr(self):
@@ -187,9 +105,10 @@ class NativeBloom:
         return F.expr(" AND ".join(tests))
 
     def split(self, df, column):
-        """(definitely_new, maybe_seen) — native counterpart of
-        ``bloom_split``: both branches are codegen filters over the scan;
-        no Python crossing, no shuffle of the probed side. The bitmap
+        """(definitely_new, maybe_seen): both branches are codegen
+        filters over the scan; no Python crossing, no shuffle of the
+        probed side. maybe_seen (true positives + ~fpr false positives)
+        still needs the exact anti-join. The bitmap
         ships as a ONE-ROW broadcast relation (cross join), not as an
         inline array literal: ``F.lit`` over a 10^4-element list expands
         to that many child Literal expressions (one py4j call each —
@@ -199,47 +118,10 @@ class NativeBloom:
         from pyspark.sql import functions as F
 
         spark = df.sparkSession
-        bm_df = spark.createDataFrame([(self.words.tolist(),)],
-                                      "__bm array<bigint>")
+        row = (self.words.view(np.int64).tolist(),)
+        bm_df = spark.createDataFrame([row], "__bm array<bigint>")
         probed = self._with_hashes(df, column).crossJoin(F.broadcast(bm_df))
         hit = self._probe_expr()
         drop = ["__h1", "__h2", "__bm"]
         return (probed.filter(~hit).drop(*drop),
                 probed.filter(hit).drop(*drop))
-
-
-def _maybe_visited_udf(bloom, spark):
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    bc = spark.sparkContext.broadcast(bloom)
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_visited(s: pd.Series) -> pd.Series:
-        bf = bc.value
-        return pd.Series(bf.contains_array(s.tolist()))
-
-    return maybe_visited
-
-
-def bloom_prefilter(df, column, bloom, spark):
-    """Keep only rows whose ``column`` is NOT (probably) in the filter —
-    the definitely-new fast path. Bloom has no false negatives, so nothing
-    visited survives this filter. Vectorized pandas UDF over the broadcast
-    filter; a pure map — no shuffle."""
-    from pyspark.sql import functions as F
-
-    return df.filter(~_maybe_visited_udf(bloom, spark)(F.col(column)))
-
-
-def bloom_split(df, column, bloom, spark):
-    """(definitely_new, maybe_seen): a FILTER-based split — both branches
-    are map-only over the scan. The complementary maybe_seen set (true
-    positives + ~fpr false positives, i.e. tiny when most docs are new)
-    still needs the exact anti-join; the join's left side has shrunk from
-    |df| to |maybe_seen|, which is the whole point of the pre-filter."""
-    from pyspark.sql import functions as F
-
-    udf = _maybe_visited_udf(bloom, spark)
-    return df.filter(~udf(F.col(column))), df.filter(udf(F.col(column)))

@@ -4,7 +4,7 @@ kernel -> spans + metrics/lineage (SURVEY.md §3.2).
 This is the Spark re-expression of the reference's ``retrieve`` path
 (/root/reference/src/wikicrawler/core/grabber.py:159-199): cache-probe
 short-circuit becomes an exact ``left_anti`` join (optionally Bloom-pruned),
-fetch+parse becomes the fused mapInPandas kernel, and the SQLite upsert
+fetch+parse becomes the fused mapInArrow kernel, and the SQLite upsert
 becomes an idempotent append keyed by (doc_id, wave).
 
 Scale design:
@@ -32,23 +32,15 @@ LINK_PREFIX = WIKI_BASE + "/wiki/"
 
 def anti_join_visited(docs: DataFrame, visited: DataFrame | None,
                       bloom=None, spark=None) -> DataFrame:
-    """Drop already-visited docs. Bloom (if given) prunes cheaply first;
-    the exact left_anti join is the authority (false positives from the
-    Bloom would drop docs — never allowed)."""
+    """Drop already-visited docs. A ``NativeBloom`` (if given) prunes
+    cheaply first; the exact left_anti join is the authority (false
+    positives from the Bloom would drop docs — never allowed)."""
     if visited is None:
         return docs
     if bloom is not None and spark is not None:
-        from .bloom import NativeBloom, bloom_split
-
         # filter-based split: the big side never shuffles; only the tiny
-        # maybe_seen branch (bloom true+false positives) pays the anti-join.
-        # NativeBloom probes with whole-stage-codegen bit tests (no Python
-        # stage on the prune path — VERDICT r5 #2); the legacy python
-        # BloomFilter keeps the pandas-UDF probe for compatibility.
-        if isinstance(bloom, NativeBloom):
-            definitely_new, maybe_seen = bloom.split(docs, "doc_id")
-        else:
-            definitely_new, maybe_seen = bloom_split(docs, "doc_id", bloom, spark)
+        # maybe_seen branch (bloom true+false positives) pays the anti-join
+        definitely_new, maybe_seen = bloom.split(docs, "doc_id")
         checked = maybe_seen.join(visited.select("doc_id"), "doc_id", "left_anti")
         return definitely_new.unionByName(checked)
     return docs.join(visited.select("doc_id"), "doc_id", "left_anti")

@@ -181,10 +181,8 @@ def crawl(
     # anti-join stays authoritative).
     bloom = None
     if use_bloom:
-        # NativeBloom (VERDICT r5 #2): JVM bit_or word aggregation build
-        # (no per-partition bitset collect), codegen probe (no Python on
-        # the candidate-prune path). Geometry still fixed up front so each
-        # wave ORs in only the new frontier.
+        # JVM bit_or word aggregation build, codegen probe; the geometry
+        # is fixed here so each wave ORs in only the new frontier
         bloom = NativeBloom(max((n_visited_start + len(seeds)) * 8, 65536),
                             bloom_fpr)
         if n_visited_start:

@@ -19,7 +19,7 @@ Correctness against real bs4 semantics is pinned by the golden tests plus the
 independent stdlib-``html.parser`` oracle in ``tests/oracle_extractor.py``.
 
 Pure Python, zero Spark imports — runs inside Arrow-batched
-``mapInPandas`` workers (kernel.py).
+``mapInArrow`` workers (kernel.py).
 """
 
 from __future__ import annotations
@@ -143,110 +143,9 @@ _CLOSE_TAG = re.compile(r"</([a-zA-Z][a-zA-Z0-9]*)\s*>")
 
 _FRAG_MEMO: dict[str, tuple | None] = {}
 _FRAG_MEMO_CAP = 16384
-#: test toggle — the equivalence property tests flip these to pin
-#: memo/C-scan outputs byte-identical to the plain python loop
+#: test toggle — the equivalence property test flips it to pin memo
+#: outputs byte-identical to the plain python loop
 CONTAINER_MEMO = True
-
-
-def _load_cscan():
-    """Compile and load the C scan loop (_cscan.c) behind the repo-wide
-    import-try pattern: any failure (no compiler, read-only tmp, load
-    error) silently yields the pure-Python tokenizer. The .so is cached
-    in the tempdir keyed by source mtime+size so workers reuse one build.
-    Caveat vs the Python path: tag-name alpha/alnum checks are ASCII-only
-    in C (Python's str.isalnum accepts unicode); the fixture grammar and
-    every golden are ASCII, and non-ASCII FRAGMENTS never reach the C
-    path at all (feed routes them to the Python loop)."""
-    import ctypes
-    import hashlib
-    import os
-    import pkgutil
-    import subprocess
-    import tempfile
-
-    try:
-        # pkgutil reads the source even when the package ships as a
-        # --py-files zip (plain open()/stat() would fail there and every
-        # executor would silently fall back to the Python loop)
-        src_bytes = pkgutil.get_data(__package__ or "wikicrawler_spark",
-                                     "_cscan.c")
-        if not src_bytes:
-            return None
-        digest = hashlib.md5(src_bytes).hexdigest()[:16]
-        # per-user 0700 cache dir + ownership check before CDLL: a world-
-        # writable shared path would let any local user pre-plant a .so at
-        # the (computable) digest name (review r3)
-        cache_dir = os.path.join(tempfile.gettempdir(),
-                                 f"wcs_cscan_u{os.getuid()}")
-        os.makedirs(cache_dir, mode=0o700, exist_ok=True)
-        # makedirs(exist_ok=True) accepts a PRE-EXISTING dir owned by
-        # another local user, in whose dir the stat->CDLL gap below is a
-        # TOCTOU window (file swapped after the check) — verify the dir
-        # itself, not just the .so (ADVICE r3)
-        dst = os.stat(cache_dir)
-        if dst.st_uid != os.getuid() or (dst.st_mode & 0o022):
-            return None
-        so = os.path.join(cache_dir, f"wcs_cscan_{digest}.so")
-        if not os.path.exists(so):
-            tmp = so + f".build{os.getpid()}"
-            csrc = tmp + ".c"
-            with open(csrc, "wb") as fh:
-                fh.write(src_bytes)
-            subprocess.run(["gcc", "-O2", "-shared", "-fPIC", csrc, "-o", tmp],
-                           check=True, capture_output=True, timeout=60)
-            os.remove(csrc)
-            # read-only-for-owner so a umask-002 host doesn't build a
-            # group-writable .so that permanently fails the mode check
-            os.chmod(tmp, 0o500)
-            os.replace(tmp, so)  # atomic: concurrent workers race safely
-        st = os.stat(so)
-        if st.st_uid != os.getuid() or (st.st_mode & 0o022):
-            return None  # not ours or group/world-writable: refuse to load
-        lib = ctypes.CDLL(so)
-        lib.scan.restype = ctypes.c_int32
-        lib.scan.argtypes = [ctypes.c_char_p, ctypes.c_int32,
-                             ctypes.POINTER(ctypes.c_int32)]
-        # smoke-probe one tricky fragment before trusting it
-        probe = b"<p class=\"x\">t</p>"
-        buf = (ctypes.c_int32 * 64)()
-        ne = lib.scan(probe, len(probe), buf)
-        if ne != 3 or buf[0] != 1 or buf[10] != 2:
-            return None
-        # block-assembly entry point (round-4 spike): probe a paragraph
-        # with one wiki anchor — text 'ty', 1 anchor, link_len 1
-        lib.scan_p.restype = ctypes.c_int32
-        lib.scan_p.argtypes = [ctypes.c_char_p, ctypes.c_int32,
-                               ctypes.POINTER(ctypes.c_int32),
-                               ctypes.POINTER(ctypes.c_int32),
-                               ctypes.c_char_p]
-        pp = b"<p>t<a href=\"/wiki/Y\">y</a></p>"
-        hdr = (ctypes.c_int32 * 8)()
-        ar = (ctypes.c_int32 * 16)()
-        out = ctypes.create_string_buffer(len(pp))
-        ok = lib.scan_p(pp, len(pp), hdr, ar, out)
-        if (ok != 1 or hdr[1] != 2 or hdr[2] != 1 or hdr[3] != 1
-                or out.raw[:2] != b"ty" or ar[4] != 2):
-            return None
-        return lib
-    except Exception:  # noqa: BLE001 — no compiler/sandbox => Python path
-        return None
-
-
-# The C scan is OPT-IN (WCS_CSCAN=1): measured +17% single-core over the
-# r2 baseline (+3% over the memo alone) but NEUTRAL-to-slightly-negative
-# at local[32] where the kernel is memory-bandwidth-bound and the
-# per-fragment ctypes call overhead cancels the scan win (interleaved A/B
-# in BENCH/BASELINE.md). The headline metric is parallel throughput, so
-# the default stays on the pure-Python loop; the artifact remains for
-# single-core-bound deployments and as the measured spike record.
-import os as _os
-
-_CSCAN = _load_cscan() if _os.environ.get("WCS_CSCAN") == "1" else None
-if _CSCAN is not None:
-    import ctypes as _ct
-_EV_BUF = None  # grow-only event buffer, reused across calls (one python
-#                 worker thread per process in mapInPandas; tests are
-#                 single-threaded too)
 
 
 def _classify_container_fragment(fragment: str) -> tuple | None:
@@ -340,8 +239,6 @@ class StreamParser:
                     for tag in memo[1]:
                         self._close(tag, blocks)
                 return blocks
-        if _CSCAN is not None and fragment.isascii():
-            return self._feed_events(fragment, blocks)
         build = self._build
         parts = fragment.split("<")
         text = parts[0]
@@ -396,56 +293,6 @@ class StreamParser:
             # whitespace in the fixture grammar; dropped.
         # Any elements still open at fragment end become cross-fragment
         # containers (scope markers): move them to the container stack.
-        for el in self._build:
-            self._stack.append((el.tag, el.attrs))
-            if self._is_scope(el.attrs):
-                self._scope_count += 1
-        self._build = []
-        return blocks
-
-    def _feed_events(self, fragment: str,
-                     blocks: list[tuple[Element, bool]]) -> list:
-        """C-scan path: _cscan.scan tokenizes the (ASCII) fragment into an
-        int32 event buffer; this loop replays the events with byte offsets
-        slicing the original str (valid because ASCII ⇒ byte offset ==
-        char offset). Event semantics mirror the Python loop exactly —
-        pinned by the goldens, the stdlib-oracle suite, and the
-        cscan-vs-python property test."""
-        global _EV_BUF
-
-        raw = fragment.encode()
-        n = len(raw)
-        need = 5 * (n // 2 + 2)
-        if _EV_BUF is None or len(_EV_BUF) < need:
-            _EV_BUF = (_ct.c_int32 * max(need, 4096))()
-        buf = _EV_BUF
-        ne = _CSCAN.scan(raw, n, buf)
-        build = self._build
-        j = 0
-        for e in range(ne):
-            t = buf[j]
-            a0 = buf[j + 1]
-            a1 = buf[j + 2]
-            if t == 0:
-                if build:
-                    text = fragment[a0:a1]
-                    build[-1].children.append(
-                        unescape(text) if "&" in text else text)
-            elif t == 2:
-                self._close(fragment[a0:a1].lower(), blocks)
-            else:  # 1 = open, 3 = self-closing open
-                tag = fragment[a0:a1].lower()
-                el = Element(tag, _parse_attrs(fragment[buf[j + 3]:buf[j + 4]]))
-                if t == 3 or tag in _VOID_TAGS:
-                    if build:
-                        build[-1].children.append(el)
-                    else:
-                        blocks.append((el, self.in_content_scope))
-                else:
-                    if build:
-                        build[-1].children.append(el)
-                    build.append(el)
-            j += 5
         for el in self._build:
             self._stack.append((el.tag, el.attrs))
             if self._is_scope(el.attrs):

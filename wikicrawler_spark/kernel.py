@@ -1,6 +1,6 @@
 """The vectorized extraction kernel.
 
-One fused, Arrow-batched ``mapInPandas`` stage turns interleaved raw docs
+One fused, Arrow-batched ``mapInArrow`` stage turns interleaved raw docs
 ``(doc_id, spans[kind∈{html,text,media}])`` into extracted span sequences
 ``(doc_id, spans[kind∈{title,paragraph,heading,link,media,wikitable,
 see_also,toc,reference,category}])``.
@@ -57,10 +57,7 @@ from __future__ import annotations
 
 import os
 import re
-import time
-from typing import Iterable, Iterator
-
-import pandas as pd
+from typing import Iterable
 
 from .html_tokenizer import Element, StreamParser, _parse_attrs
 from .latexconv import latex_to_text
@@ -93,70 +90,6 @@ _FAST_ANCHOR = re.compile(r"<a(\s[^<>]*)?>([^<&]*)</a>\Z")
 # any hit falls back to the tree parser
 _ANCHOR_SLOW_CLASSES = frozenset(
     {"references", "div-col", "mw-search-results", "navbox"})
-
-# Round-4 spike (VERDICT r3 #7): C block assembly for the fast-paragraph
-# shape — grammar validation, text assembly, and anchor extraction in ONE
-# native pass over the fragment bytes, skipping regex matching, piece
-# lists, and attr dicts. Opt-in (WCS_CASSEMBLE=1) like the C scan loop;
-# BENCH/BASELINE.md records the measured single-core and local[32] A/B.
-# C-accepted fragments produce byte-identical output to the python fast
-# path (equivalence property test); C-rejected fragments fall through to
-# the unchanged python dispatch.
-_CASM = None
-if os.environ.get("WCS_CASSEMBLE") == "1":
-    from .html_tokenizer import _load_cscan as _casm_loader
-
-    _CASM = _casm_loader()
-if _CASM is not None:
-    import ctypes as _ct
-_CASM_BUFS = None  # (hdr, anchor_recs, out_text, cap) — grow-only; one
-#                    python worker thread per process (see _EV_BUF)
-
-
-def _casm_paragraph(frag: str, in_scope: bool, body: list,
-                    latex: bool) -> bool:
-    """Dispatch one ascii, entity-free <p>...</p> fragment through the C
-    assembler. Returns False (untouched state) when the fragment is not
-    fast-shaped; True after appending exactly what the python
-    ``fast_paragraph`` closure would append."""
-    global _CASM_BUFS
-    raw = frag.encode()
-    n = len(raw)
-    if _CASM_BUFS is None or _CASM_BUFS[3] < n:
-        cap = max(n, 4096)
-        _CASM_BUFS = ((_ct.c_int32 * 8)(),
-                      (_ct.c_int32 * (5 * (cap // 7 + 2)))(),
-                      _ct.create_string_buffer(cap), cap)
-    hdr, ar, out, _cap = _CASM_BUFS
-    if not _CASM.scan_p(raw, n, hdr, ar, out):
-        return False
-    tl, na, ll = hdr[1], hdr[2], hdr[3]
-    for k in range(na):
-        f = ar[k * 5 + 4]
-        # flags: 1 = image-class token, 2 = href^="/wiki" (implies href)
-        if f & 1:
-            h0 = ar[k * 5 + 2]
-            if h0 >= 0:
-                href = frag[h0:ar[k * 5 + 3]]
-                atext = frag[ar[k * 5]:ar[k * 5 + 1]]
-                body.append(("media", atext if atext else None,
-                             WIKI_BASE + "/" + href.lstrip("/")))
-    if not in_scope:
-        return True
-    is_nav = hdr[4] == 1
-    boiler = is_nav or (tl > 0 and ll / tl > LINK_DENSITY_MAX)
-    if not boiler and tl:
-        text = _ct.string_at(out, tl).decode()
-        if text != "\n":
-            body.append(("paragraph",
-                         latex_to_text(text) if latex else text, None))
-    if not is_nav:
-        for k in range(na):
-            if ar[k * 5 + 4] & 2:
-                body.append(("link", frag[ar[k * 5]:ar[k * 5 + 1]],
-                             WIKI_BASE + frag[ar[k * 5 + 2]:ar[k * 5 + 3]]))
-    return True
-
 
 # Link-density threshold for the explicit boilerplate classifier (E14).
 # A <p> whose anchor text makes up more than this fraction of its total
@@ -357,9 +290,9 @@ def _extract_core(doc_id: str, ordered: Iterable, latex: bool = False) -> list[t
 
         # media anchors are collected whether or not the block is in scope
         # (reference scans the whole page, grabber.py:320). Parse attrs
-        # unconditionally (memoized): the earlier substring pre-gate
-        # ('class="' in rawattrs) missed spaced '=' forms the tree path's
-        # _parse_attrs accepts — found by the r4 C-assembly property test.
+        # unconditionally (memoized): a substring pre-gate
+        # ('class="' in rawattrs) would miss spaced '=' forms the tree
+        # path's _parse_attrs accepts.
         for rawattrs, atext in p_anchors:
             attrs = _parse_attrs(rawattrs)
             if "image" in attrs.get("class", "").split():
@@ -437,14 +370,9 @@ def _extract_core(doc_id: str, ordered: Iterable, latex: bool = False) -> list[t
         if kind == "html":
             if text:
                 if FAST_PARAGRAPH_PATH and "&" not in text:
-                    if text.startswith("<p") and text.endswith("</p>"):
-                        if (_CASM is not None and text.isascii()
-                                and _casm_paragraph(
-                                    text, parser.in_content_scope,
-                                    body, latex)):
-                            continue
-                        if fast_paragraph(text):
-                            continue
+                    if (text.startswith("<p") and text.endswith("</p>")
+                            and fast_paragraph(text)):
+                        continue
                     if text.startswith("<h") and fast_heading(text):
                         continue
                     if text.startswith("<a") and fast_anchor(text):
@@ -490,8 +418,7 @@ def _extract_core(doc_id: str, ordered: Iterable, latex: bool = False) -> list[t
 def make_arrow_kernel(*, latex: bool = False):
     """mapInArrow kernel: reads the ListArray<Struct> spans column through
     its FLAT child arrays (4 list conversions per batch) instead of
-    materializing one python dict per span — measured ~2x less overhead
-    than the pandas/dict path on this corpus. Output is rebuilt as Arrow
+    materializing one python dict per span. Output is rebuilt as Arrow
     child arrays the same way."""
     import pyarrow as pa
 
@@ -548,8 +475,8 @@ def make_arrow_kernel(*, latex: bool = False):
                     seg = zip(kinds[pos:end], texts[pos:end], refs[pos:end])
                 else:
                     # stable sort on offset ONLY — a full-tuple sort would
-                    # compare None texts (TypeError) and diverge from the
-                    # pandas engine's offset-keyed stable sort on ties
+                    # compare None texts (TypeError) and break input order
+                    # on offset ties (extract_doc's stable sort keeps it)
                     seg = [
                         (k, t, r) for _, k, t, r in sorted(
                             zip(soffs[pos:end], kinds[pos:end],
@@ -577,49 +504,15 @@ def make_arrow_kernel(*, latex: bool = False):
     return kernel
 
 
-def make_extract_kernel(*, latex: bool = False, metrics_dir: str | None = None):
-    """Build the mapInPandas function. One Arrow batch in -> one batch of
-    (doc_id, spans) out. Optional per-partition metrics side-channel (the
-    extract job uses a separate native aggregation instead; this hook exists
-    for spark-submit runs without a metrics pass)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t0 = time.monotonic()
-        n_docs = 0
-        n_spans = 0
-        for pdf in batches:
-            out_spans = [
-                extract_doc(d, s, latex=latex)
-                for d, s in zip(pdf["doc_id"], pdf["spans"])
-            ]
-            n_docs += len(out_spans)
-            n_spans += sum(len(x) for x in out_spans)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "spans": out_spans})
-        if metrics_dir is not None:
-            # best-effort sidecar (exact metrics come from the data path)
-            try:
-                pid = os.getpid()
-                with open(os.path.join(metrics_dir, f"part-{pid}.txt"), "a") as f:
-                    f.write(f"{n_docs}\t{n_spans}\t{int((time.monotonic()-t0)*1000)}\n")
-            except OSError:
-                pass
-
-    return kernel
-
-
-def extract_spans(docs_df, *, latex: bool = False, engine: str = "arrow"):
+def extract_spans(docs_df, *, latex: bool = False):
     """DataFrame transform: raw interleaved docs -> extracted span docs.
 
     ``docs_df``: (doc_id string, spans array<struct<kind,text,media_ref,offset>>).
-    Returns the same shape with output span kinds. ONE map stage, no
-    shuffle, no per-row Python. engine='arrow' (default) reads/writes the
-    nested column through flat Arrow child arrays (mapInArrow, ~2x less
-    serde than the pandas dict path); engine='pandas' keeps the
-    mapInPandas path (equality pinned by tests).
+    Returns the same shape with output span kinds. ONE mapInArrow stage,
+    no shuffle, no per-row Python; the nested column crosses as flat Arrow
+    child arrays (``make_arrow_kernel``).
     """
-    if engine == "arrow":
-        return docs_df.mapInArrow(make_arrow_kernel(latex=latex), schema=DOC_DDL)
-    return docs_df.mapInPandas(make_extract_kernel(latex=latex), schema=DOC_DDL)
+    return docs_df.mapInArrow(make_arrow_kernel(latex=latex), schema=DOC_DDL)
 
 
 def extract_from_parquet(spark, path: str, *, latex: bool = False,

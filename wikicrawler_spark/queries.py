@@ -11,7 +11,7 @@ Design rules for oracle parity:
   * aggregate/window outputs cast to the same width on both sides
     (DuckDB row_number()/count are BIGINT; Spark row_number is int)
 
-The kernel-extraction queries run the REAL mapInPandas kernel over docs
+The kernel-extraction queries run the REAL mapInArrow kernel over docs
 wrapped deterministically from ``documents.text`` (title/heading/paragraph/
 anchor/wikitable markup built with native expressions); the oracle rebuilds
 the expected spans from the raw text with pure SQL.
@@ -2783,6 +2783,10 @@ FROM events GROUP BY user_id
 # every re-delivery (exactly-once output from an at-least-once upstream).
 
 
+# state-store partitions for the bounded 3-file windowed replay
+_REPLAY_STATE_PARTITIONS = 8
+
+
 def q_stream_windows_replay(spark, sf_dir):
     """Third streaming driver row: EVENT-time windowed aggregation with a
     watermark (streaming.stream_event_windows — the late-data contract)
@@ -2845,8 +2849,13 @@ def q_stream_windows_replay(spark, sf_dir):
     ranked.coalesce(1).write.mode("overwrite").partitionBy("__b").parquet(tmp)
     for i in range(3):
         dst = os.path.join(in_dir, f"batch-{i:02d}.parquet")
-        shutil.move(glob.glob(os.path.join(tmp, f"__b={i}", "part-*.parquet"))[0],
-                    dst)
+        b_dir = os.path.join(tmp, f"__b={i}")
+        if not os.path.isdir(b_dir):
+            # partitionBy writes no directory for an empty batch (fewer
+            # than 3 events): replay it as an empty file of the same schema
+            (spark.createDataFrame([], ranked.drop("__b").schema)
+             .write.parquet(b_dir))
+        shutil.move(glob.glob(os.path.join(b_dir, "part-*.parquet"))[0], dst)
         os.utime(dst, (mtime + i, mtime + i))
     src = (spark.readStream
            .schema("ts timestamp, event_type string, value double")
@@ -2856,13 +2865,11 @@ def q_stream_windows_replay(spark, sf_dir):
     # spark.sql.shuffle.partitions; the session default (sized for the
     # batch queries' scans) makes every one of the 4 microbatches pay that
     # many state-store tasks for a bounded 3-file replay (measured 2.5x
-    # the stream wall). Parameterised per the scale rules: replay default
-    # 8, production streams size it to their cluster via env. The session
-    # conf is restored before returning.
-    n_state = int(os.environ.get("WCS_STREAM_SHUFFLE_PARTITIONS", "8"))
+    # the stream wall). The session conf is restored before returning.
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(_REPLAY_STATE_PARTITIONS))
         q = (stream_event_windows(src, window="1 hour", watermark="30 minutes")
              .writeStream.format("memory").queryName(qname)
              .outputMode("append").trigger(availableNow=True).start())
@@ -3574,43 +3581,62 @@ GROUP BY n_name
 # ------------------------------------------------------------- registry
 
 def queries() -> dict:
-    # ORDER MATTERS: the driver's correctness gate covers only the FIRST 50
-    # registry entries, so the window rotates each round by a staleness
-    # rule (tests/test_entry_contract.py + scripts/dep_fingerprint.py):
-    # any query whose dependency fingerprint changed since its last green
-    # driver round must sit inside the window, and (r5 age bound) any tail
-    # query not driver-checked within 2 rounds rotates in regardless.
-    # Round-6 window = the 29 queries whose fingerprints changed in the
-    # r6 optimization pass (explode-guard fixes, simhash/CC/cosine/stream
-    # restructures, curate_kept split) + the 16 r3-stale rows the age
-    # bound forces in (VERDICT r5 #1; 6 of the 22 listed there also
-    # changed fingerprint and are counted in the 29) + 5 of the oldest
-    # r4 rows as fillers. Tail = 34 r5-green rows whose transitive deps
-    # are byte-identical to the r5 stamp.
     return {
-        # -- r6 window: fingerprints changed by the optimization pass --
+        # -- extraction: the kernel over wrapped documents --
+        "extract_titles": q_extract_titles,
+        "extract_headings": q_extract_headings,
+        "extract_paragraphs": q_extract_paragraphs,
+        "extract_link_counts": q_extract_link_counts,
+        "extract_wikitables": q_extract_wikitables,
+        "extract_toc": q_extract_toc,
+        "extract_see_also": q_extract_see_also,
+        "extract_references": q_extract_references,
+        "extract_categories": q_extract_categories,
+        "extract_disambig_links": q_extract_disambig_links,
+        "extract_search_links": q_extract_search_links,
+        "span_offsets_dense": q_span_offsets_dense,
+        "media_manifest": q_media_manifest,
+        "page_view": q_page_view_scalars,
+        "latex_paragraphs": q_latex_paragraphs,
+        "markdown_docs": q_markdown_docs,
+        "validate_doc_ids": q_validate_doc_ids,
+        "search_direct": q_search_direct,
+        "autosearch_chain": q_autosearch_chain,
+        # -- text analytics --
         "word_freq": q_word_freq,
+        "word_freq_treebank": q_word_freq_treebank,
         "argmax_freq": q_argmax_freq,
         "bigram_collocations": q_bigram_collocations,
         "trigram_collocations": q_trigram_collocations,
         "most_similar_token": q_most_similar_token,
-        "markdown_docs": q_markdown_docs,
-        "word_freq_treebank": q_word_freq_treebank,
-        "autosearch_chain": q_autosearch_chain,
-        "chunk_documents": q_chunk_documents,
+        "sentence_slices": q_sentence_slices,
+        "sentence_sentiment": q_sentence_sentiment,
+        # -- curation and dedup --
         "curate_corpus": q_curate_corpus,
         "training_corpus": q_training_corpus,
-        "stream_windows_replay": q_stream_windows_replay,
+        "span_clean_corpus": q_span_clean_corpus,
+        "chunk_documents": q_chunk_documents,
+        "token_counts": q_token_counts,
+        "quality_scores": q_quality_scores,
+        "language_id": q_language_id,
+        "repetition_scores": q_repetition_scores,
+        "pii_scrub": q_pii_scrub,
+        "fingerprint": q_fingerprint,
+        "dedup_exact_prefix": q_dedup_exact_prefix,
         "duplicate_spans": q_duplicate_spans,
         "duplicate_span_removal": q_duplicate_span_removal,
-        "span_clean_corpus": q_span_clean_corpus,
-        "semantic_dedup": q_semantic_dedup,
         "ngram_jaccard": q_ngram_jaccard,
         "minhash_signatures": q_minhash_signatures,
         "minhash_lsh_pairs": q_minhash_lsh_pairs,
         "simhash": q_simhash,
         "simhash_near_dups": q_simhash_near_dups,
-        "dedup_clusters": q_dedup_clusters,
+        "semantic_dedup": q_semantic_dedup,
+        "mix_weights": q_mix_weights,
+        "pack_sequences": q_pack_sequences,
+        "stratified_sample": q_stratified_sample,
+        "contamination_check": q_contamination,
+        # -- similarity search and ANN --
+        "bm25_search": q_bm25_search,
         "cosine_topk": q_cosine_topk,
         "lsh_ann_topk": q_lsh_ann_topk,
         "lsh_ann_recall": q_lsh_ann_recall,
@@ -3618,67 +3644,36 @@ def queries() -> dict:
         "embedding_near_dups": q_embedding_near_dups,
         "embedding_near_dups_lsh": q_embedding_near_dups_lsh,
         "embedding_near_dups_recall": q_embedding_near_dups_recall,
-        # -- r6 window: r3-stale rows the age bound rotates in (deps
-        #    unchanged; fresh driver rows re-green them) --
-        "asof_login_value": q_asof_login_value,
-        "bm25_search": q_bm25_search,
-        "contamination_check": q_contamination,
-        "cube_lineitem": q_cube_lineitem,
-        "dedup_exact_prefix": q_dedup_exact_prefix,
-        "distinct_suppliers_per_part": q_distinct_suppliers_per_part,
-        "events_sessionize": q_events_sessionize,
-        "mix_weights": q_mix_weights,
-        "pack_sequences": q_pack_sequences,
+        # -- graph --
+        "dedup_clusters": q_dedup_clusters,
         "pagerank_orders": q_pagerank,
-        "pivot_linestatus": q_pivot_linestatus,
-        "set_ops_customers": q_set_ops_customers,
-        "sketch_accuracy": q_sketch_accuracy,
-        "stratified_sample": q_stratified_sample,
-        "tpch_q1": q_tpch_q1,
-        "value_percentiles": q_value_percentiles,
-        # -- r6 window fillers: the 5 oldest r4 rows, freshened early --
-        "upsert_latest": q_upsert_latest,
-        "media_audio": q_media_audio,
-        "media_frames": q_media_frames,
-        "orders_by_nation": q_orders_by_nation,
-        "top_orders_per_customer": q_top_orders_per_customer,
-        # ---- 50-entry gate window ends here ----
-        # -- tail: r5-green, transitive deps byte-identical to the r5
-        #    stamp (enforced by the dep-fingerprint guard test) --
-        "extract_headings": q_extract_headings,
-        "extract_wikitables": q_extract_wikitables,
-        "span_offsets_dense": q_span_offsets_dense,
-        "media_manifest": q_media_manifest,
-        "page_view": q_page_view_scalars,
-        "extract_toc": q_extract_toc,
-        "extract_see_also": q_extract_see_also,
-        "extract_references": q_extract_references,
-        "extract_categories": q_extract_categories,
-        "validate_doc_ids": q_validate_doc_ids,
-        "repetition_scores": q_repetition_scores,
-        "pii_scrub": q_pii_scrub,
-        "latex_paragraphs": q_latex_paragraphs,
-        "token_counts": q_token_counts,
-        "quality_scores": q_quality_scores,
-        "language_id": q_language_id,
-        "fingerprint": q_fingerprint,
-        "sentence_slices": q_sentence_slices,
-        "extract_titles": q_extract_titles,
-        "extract_paragraphs": q_extract_paragraphs,
-        "extract_link_counts": q_extract_link_counts,
-        "search_direct": q_search_direct,
-        "rollup_orders": q_rollup_orders,
+        # -- events and streaming --
+        "events_sessionize": q_events_sessionize,
         "events_user_deltas": q_events_user_deltas,
-        "extract_disambig_links": q_extract_disambig_links,
-        "extract_search_links": q_extract_search_links,
+        "asof_login_value": q_asof_login_value,
+        "upsert_latest": q_upsert_latest,
         "stream_sessionize_replay": q_stream_sessionize_replay,
         "stream_dedup_replay": q_stream_dedup_replay,
-        "sentence_sentiment": q_sentence_sentiment,
+        "stream_windows_replay": q_stream_windows_replay,
+        # -- multimodal --
+        "media_decode": q_media_decode,
+        "media_frames": q_media_frames,
+        "media_audio": q_media_audio,
+        "pdf_layout_spans": q_pdf_layout_spans,
+        # -- relational and TPC-H --
+        "tpch_q1": q_tpch_q1,
         "tpch_q3": q_tpch_q3,
         "tpch_q5": q_tpch_q5,
         "tpch_q6": q_tpch_q6,
-        "pdf_layout_spans": q_pdf_layout_spans,
-        "media_decode": q_media_decode,
+        "orders_by_nation": q_orders_by_nation,
+        "top_orders_per_customer": q_top_orders_per_customer,
+        "rollup_orders": q_rollup_orders,
+        "cube_lineitem": q_cube_lineitem,
+        "pivot_linestatus": q_pivot_linestatus,
+        "set_ops_customers": q_set_ops_customers,
+        "distinct_suppliers_per_part": q_distinct_suppliers_per_part,
+        "value_percentiles": q_value_percentiles,
+        "sketch_accuracy": q_sketch_accuracy,
     }
 
 

@@ -6,7 +6,7 @@ event time anywhere), and the crawl itself is deliberately batch-per-wave
 reference's cache-on-fetch behavior implies: documents ARRIVING over time
 are extracted incrementally, exactly once, resumable.
 
-Spark-first shape: the SAME mapInPandas kernel runs unchanged on a
+Spark-first shape: the SAME mapInArrow kernel runs unchanged on a
 streaming DataFrame (map-only operators are streaming-compatible), with a
 file source (``maxFilesPerTrigger`` = admission control, the scan-layer
 analog of the reference's rate limiter at core/grabber.py:84-101 — SURVEY
