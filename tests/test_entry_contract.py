@@ -98,10 +98,14 @@ def test_query_matches_oracle(spark, con, name):
     assert_matches_oracle(name, fn(spark, SF_DIR), con)
 
 
-def test_stream_windows_replay_two_events(spark, tmp_path):
-    """Two events leave the third replay batch empty; the replay must
-    still run and match its oracle (the earliest and the latest event, so
-    the first one's window closes and is emitted)."""
+@pytest.mark.parametrize("name", ["stream_sessionize_replay",
+                                  "stream_dedup_replay",
+                                  "stream_windows_replay"])
+def test_stream_replay_two_events(spark, tmp_path, name):
+    """Two events leave one of the three replay batches empty; every
+    replay must still run and match its oracle (the earliest and the
+    latest event, so the windows replay's first window closes and is
+    emitted)."""
     import pyarrow.parquet as pq
 
     events = pq.read_table(f"{SF_DIR}/events.parquet").sort_by(
@@ -110,9 +114,18 @@ def test_stream_windows_replay_two_events(spark, tmp_path):
     pq.write_table(events.take([0, events.num_rows - 1]), path)
     con = duckdb.connect()
     con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
-    sdf = entrymod.queries()["stream_windows_replay"](spark, str(tmp_path))
+    sdf = entrymod.queries()[name](spark, str(tmp_path))
     assert sdf.count() > 0
-    assert_matches_oracle("stream_windows_replay", sdf, con)
+    assert_matches_oracle(name, sdf, con)
+
+
+def test_autosearch_chain_leaves_no_cached_tables(spark):
+    """The autosearch title table is materialized per call, not cached: a
+    cached table would outlive the query and serve the next call."""
+    spark.catalog.clearCache()
+    df = entrymod.queries()["autosearch_chain"](spark, SF_DIR)
+    assert df.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_training_corpus_leaves_no_persisted_rdds(spark):

@@ -1,5 +1,5 @@
 """PageRank (wikicrawler_spark.graph) vs an independent python power
-iteration, plus dangling-mass and checkpoint behavior."""
+iteration, plus dangling-mass behavior."""
 
 from __future__ import annotations
 
@@ -51,13 +51,3 @@ def test_pagerank_all_dangling_is_uniform(spark):
     got = {r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()}
     assert got["z"] == max(got.values())
     assert abs(sum(got.values()) - 1.0) < 1e-5
-
-
-def test_pagerank_checkpoint_interval(spark):
-    """checkpoint_every must not change results (lineage truncation only)."""
-    df = spark.createDataFrame(EDGES, "src string, dst string")
-    a = {r["node"]: r["rank"]
-         for r in pagerank(df, iterations=5, checkpoint_every=1).collect()}
-    b = {r["node"]: r["rank"]
-         for r in pagerank(df, iterations=5, checkpoint_every=0).collect()}
-    assert a == b

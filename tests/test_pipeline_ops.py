@@ -652,21 +652,6 @@ def test_semantic_dedup_survivors(spark):
     assert survivors == {0, 1, 2, 3, 4, 5}
 
 
-def test_duplicate_spans_materialize_invariant(spark):
-    """The staging boundary is a perf fix, not a semantic one: staged and
-    unstaged plans emit the identical span set."""
-    shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [("a", f"{shared} one two"), ("b", f"pad {shared} three")]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    key = lambda r: (r["doc_a"], r["doc_b"], r["start_a"], r["start_b"],
-                     r["len_tokens"])
-    staged = {key(r) for r in
-              D.duplicate_token_spans(df, n=8, materialize=True).collect()}
-    inline = {key(r) for r in
-              D.duplicate_token_spans(df, n=8, materialize=False).collect()}
-    assert staged == inline and staged
-
-
 def test_remove_duplicate_spans_planted(spark):
     """Keep-min-id rewrite: senior copy intact, junior run excised with
     original case preserved and whitespace normalized; exact dup empties;
@@ -813,7 +798,7 @@ def test_duplicate_spans_fuzz_vs_python(spark):
         df = spark.createDataFrame(list(texts.items()),
                                    "doc_id string, text string")
         got = {tuple(r) for r in D.duplicate_token_spans(
-            df, n=4, max_docs_per_shingle=3, materialize=False).collect()}
+            df, n=4, max_docs_per_shingle=3).collect()}
         assert got == _py_dup_spans(texts, n=4, cap=3)
 
     run()

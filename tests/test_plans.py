@@ -66,6 +66,17 @@ def test_extract_query_python_stage_count(q):
     assert _counts(q["extract_titles"])["python"] <= 2
 
 
+def test_training_corpus_kernel_runs_once(spark):
+    """The extraction body is staged (staging.stage): the kernel runs once,
+    inside the stage write, and the returned plan scans the staged parquet
+    with no MapInArrow left in it. Without the boundary the kernel subtree
+    re-ran once per downstream branch (11 times in the r4 audit)."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.queries()["training_corpus"](spark, SF_DIR)
+    assert "MapInArrow" not in _plan(df)
+
+
 def test_mixing_op_plan_shapes(spark):
     """Training-mix ops (PLANS.md 'Training-mix assembly'): sampling is a
     pure narrow filter (ZERO exchanges), packing pays exactly ONE shuffle

@@ -113,10 +113,11 @@ def test_asof_join_rejects_carried_name_collision(spark):
         asof_join(left, right, on="ts", by="user_id", value_cols=["v"])
 
 
-def test_staging_dirs_unique_and_cleaned():
+def test_staging_dirs_unique_and_cleaned(spark):
     """ADVICE r4: materialization boundaries must not leak staging dirs
     across invocations; paths are unique per call and cleanup_staged()
-    (also registered atexit) removes everything this process reserved."""
+    (also registered atexit) removes everything this process reserved,
+    stage() output included."""
     import os
 
     from wikicrawler_spark import staging
@@ -128,6 +129,12 @@ def test_staging_dirs_unique_and_cleaned():
     os.makedirs(b, exist_ok=True)
     with open(os.path.join(a, "part-0"), "w") as f:
         f.write("x")
+    df = spark.createDataFrame([(1, "x"), (2, None)], "k long, v string")
+    staged = staging.stage(df, "wcs_test_stage")
+    assert sorted(staged.collect()) == sorted(df.collect())
+    path = staging._STAGED[-1]
+    assert path not in (a, b) and os.path.isdir(path)
+    assert staged.inputFiles() and all(path in f for f in staged.inputFiles())
     staging.cleanup_staged()
-    assert not os.path.exists(a) and not os.path.exists(b)
+    assert not any(os.path.exists(p) for p in (a, b, path))
     assert staging._STAGED == []

@@ -58,13 +58,10 @@ class CrawlResult:
     wave_sizes: list = field(default_factory=list)
     #: per-wave stage walls (seconds), one dict per wave run here:
     #: count / spans(kernel+write) / bloom / frontier(links+anti-join+write)
-    #: / visited(write), plus the lineage+metrics checkpoint tax as either
-    #: separate 'lineage' and 'metrics' walls (async_aux=False — the strict
-    #: inline-audit mode BENCH/BASELINE.md's breakdown table was measured
-    #: in) or a single near-zero 'aux_submit' wall (async_aux=True — the
-    #: writes run on the aux pool, joined before crawl() returns) — the
-    #: crawl's own cost breakdown, so checkpoint tax vs compute is
-    #: measurable per run
+    #: / visited(write), plus, with a ckpt_dir, a near-zero 'aux_submit'
+    #: wall for the lineage+metrics checkpoint writes (they run on the aux
+    #: pool and are joined before crawl() returns) — the crawl's own cost
+    #: breakdown, so checkpoint tax vs compute is measurable per run
     wave_stages: list = field(default_factory=list)
 
 
@@ -134,7 +131,6 @@ def crawl(
     keep_spans: bool = True,
     latex: bool = False,
     visited_buckets: int | None = None,
-    async_aux: bool = True,
 ) -> CrawlResult:
     """Run the frontier BFS from ``seeds`` over the ``docs`` table.
 
@@ -287,16 +283,10 @@ def crawl(
                 # they append ASYNCHRONOUSLY on the aux pool; futures join
                 # before the crawl returns, failures re-raise there (r4 ask #6).
                 for name, df in (("lineage", lineage), ("metrics", metrics)):
-                    if async_aux:
-                        aux_futures.append(aux_pool.submit(
-                            lambda d=df, p=_wave_dir(ckpt_dir, wave, name):
-                            d.write.mode("overwrite").parquet(p)))
-                    else:
-                        df.write.mode("overwrite").parquet(
-                            _wave_dir(ckpt_dir, wave, name))
-                        _mark(name)  # separate lineage/metrics walls
-                if async_aux:
-                    _mark("aux_submit")
+                    aux_futures.append(aux_pool.submit(
+                        lambda d=df, p=_wave_dir(ckpt_dir, wave, name):
+                        d.write.mode("overwrite").parquet(p)))
+                _mark("aux_submit")
                 aux_waves.append(wave)
                 nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
                 nxt = spark.read.parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))

@@ -12,11 +12,11 @@ Scale design:
   * one `count()` up front (scalar), then `iterations` rounds of
     join + groupBy-sum — each round is ONE shuffle on dst plus a broadcast
     of the 1-row dangling-mass aggregate;
-  * `localCheckpoint(eager=True)` every `checkpoint_every` rounds truncates
-    the growing lineage (the classic iterative-algorithm failure mode:
-    un-truncated plans re-execute the whole history per action and
-    eventually blow the optimizer); production swaps this for a
-    checkpoint dir / Iceberg table per SURVEY S11;
+  * `localCheckpoint(eager=True)` after every round truncates the growing
+    lineage (the classic iterative-algorithm failure mode: un-truncated
+    plans re-execute the whole history per action and eventually blow the
+    optimizer); production swaps this for a checkpoint dir / Iceberg table
+    per SURVEY S11;
   * ranks stay double; the power iteration is a contraction (damping
     0.85), so cross-engine float-order differences stay ~1e-15 and the
     round-6 output is engine-stable — verified against an unrolled-CTE
@@ -29,30 +29,27 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def pagerank(edges: DataFrame, *, iterations: int = 6, damping: float = 0.85,
-             src_col: str = "src", dst_col: str = "dst",
-             checkpoint_every: int = 1, checkpoint_eager: bool = True) -> DataFrame:
+             src_col: str = "src", dst_col: str = "dst") -> DataFrame:
     """Standard PageRank with uniform teleport and dangling-mass
     redistribution. ``edges`` is a directed (src, dst) DataFrame (dedupe
     parallel edges upstream if each should count once). Returns
     (node, rank) with rank rounded to 6."""
     src = F.col(src_col)
     dst = F.col(dst_col)
-    e = edges.select(src.alias("src"), dst.alias("dst"))
-    if checkpoint_every:
-        # every iteration re-reads edges/nodes/deg: materialize them ONCE
-        # (localCheckpoint here; a checkpoint dir / Iceberg table on a real
-        # cluster) instead of recomputing the upstream plan 2*iterations
-        # times down the dangling + contribution subtrees
-        e = e.localCheckpoint(eager=checkpoint_eager)
+    # every iteration re-reads edges/nodes/deg: materialize them ONCE
+    # (localCheckpoint here; a checkpoint dir / Iceberg table on a real
+    # cluster) instead of recomputing the upstream plan 2*iterations
+    # times down the dangling + contribution subtrees
+    e = (edges.select(src.alias("src"), dst.alias("dst"))
+         .localCheckpoint(eager=True))
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    deg = e.groupBy("src").agg(F.count("*").cast("double").alias("outdeg"))
-    if checkpoint_every:
-        nodes = nodes.localCheckpoint(eager=checkpoint_eager)
-        deg = deg.localCheckpoint(eager=checkpoint_eager)
+    deg = (e.groupBy("src").agg(F.count("*").cast("double").alias("outdeg"))
+           .localCheckpoint(eager=True))
     n = nodes.count()
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for i in range(iterations):
@@ -80,13 +77,12 @@ def pagerank(edges: DataFrame, *, iterations: int = 6, damping: float = 0.85,
                  ).alias("rank"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 \
-                and i + 1 < iterations:
+        if i + 1 < iterations:
             # eager per-iteration materialization: the next round consumes
             # `ranks` TWICE (dangling branch + contribution branch); an
             # un-materialized plan would recompute the whole history down
             # both subtrees, compounding 2x per round
-            ranks = ranks.localCheckpoint(eager=checkpoint_eager)
+            ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -111,8 +107,8 @@ def _star_checksum(e: DataFrame) -> tuple[int, int]:
 
 
 def connected_components(edges: DataFrame, *, src_col: str = "src",
-                         dst_col: str = "dst", max_iterations: int = 25,
-                         checkpoint_eager: bool = False) -> DataFrame:
+                         dst_col: str = "dst",
+                         max_iterations: int = 25) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — the O(log^2 n)-round formulation, NOT naive min-label
@@ -132,25 +128,25 @@ def connected_components(edges: DataFrame, *, src_col: str = "src",
     ``component`` is the minimum node id in the component. Node ids must be
     orderable (any comparable type; bigint at corpus scale).
 
-    ``checkpoint_eager=False`` (default) keeps each round at ONE Spark
-    action: the lazy localCheckpoint is materialized by the round's own
+    The per-round checkpoint is LAZY, which keeps each round at ONE Spark
+    action: the localCheckpoint is materialized by the round's own
     convergence-checksum aggregate, instead of an eager materialization
     action followed by a separate checksum action (2 driver round-trips
     per round — measured as half the operator's wall at bench scale,
     where rounds are driver-latency-bound). Lineage truncation is
-    identical; pass True to force materialization before the checksum.
+    identical.
     """
     e = (
         edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=checkpoint_eager)
+        .localCheckpoint(eager=False)
     )
     all_nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint(eager=checkpoint_eager)
+        .localCheckpoint(eager=False)
     )
     prev = _star_checksum(
         e.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
@@ -187,7 +183,7 @@ def connected_components(edges: DataFrame, *, src_col: str = "src",
             .unionByName(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=checkpoint_eager)
+            .localCheckpoint(eager=False)
         )
         cur = _star_checksum(e)
         if cur == prev:

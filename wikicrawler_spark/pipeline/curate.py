@@ -20,14 +20,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..staging import stage
 from . import dedup as D
 from . import text_quality as Q
 
 
 def curate_kept(docs: DataFrame, *, min_quality: float = 0.5,
                 lang: str = "en", near_threshold: float = 0.5,
-                prefix_len: int = 30,
-                materialize: bool = True) -> DataFrame:
+                prefix_len: int = 30) -> DataFrame:
     """Everything in :func:`curate_corpus` EXCEPT the fingerprint stage:
     the survivor rows (doc_id, text, n_tokens, quality, __toks) after the
     quality/language funnel, exact prefix dedup and MinHash-LSH near-dup
@@ -54,18 +54,16 @@ def curate_kept(docs: DataFrame, *, min_quality: float = 0.5,
       array<string> the same size as the text doubles every shuffle and
       serialization the survivor set flows through (67 s -> 13 s for the
       survivor stage alone).
-    * ``materialize=True`` (default) writes the survivor set to a temp
-      parquet stage and reads it back before the pairwise section. The
-      survivors feed FOUR downstream plan branches (both MinHash shingle
-      passes, the anti-join left side, the fingerprint) and Spark has no
+    * The survivor set is staged (``staging.stage``: a parquet write and
+      read-back) before the pairwise section. The survivors feed FOUR
+      downstream plan branches (both MinHash shingle passes, the
+      anti-join left side, the fingerprint) and Spark has no
       cross-branch subplan CSE, so without a boundary the whole per-doc
       funnel re-executes once per branch (439 s -> ~120 s end-to-end).
       This is the production shape — a real pipeline stages the filtered
       corpus as a table between the per-doc and pairwise phases. The
       stage dir is unique per invocation and removed at process exit
-      (lifetime contract: wikicrawler_spark.staging). Pass
-      ``materialize=False`` to keep the single fully-declarative plan
-      (results are identical — the DuckDB oracle replays both)."""
+      (lifetime contract: wikicrawler_spark.staging)."""
     toked = docs.select("doc_id", "text",
                         Q._tokens(F.col("text")).alias("__toks"))
     scored = toked.select(
@@ -86,16 +84,9 @@ def curate_kept(docs: DataFrame, *, min_quality: float = 0.5,
         base.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1).drop("__rn")
     )
-    if materialize:
-        # unique per invocation; removed at process exit (ADVICE r4 —
-        # lifetime contract in wikicrawler_spark.staging)
-        from ..staging import stage_dir
-
-        stage = stage_dir("wcs_curate_surv")
-        survivors.write.mode("overwrite").parquet(stage)
-        survivors = docs.sparkSession.read.parquet(stage)
-    # re-derive the token attribute on the post-boundary (or post-window)
-    # segment: same values as the pre-window tokens, one split per doc
+    survivors = stage(survivors, "wcs_curate_surv")
+    # re-derive the token attribute on the post-boundary segment: same
+    # values as the pre-window tokens, one split per doc
     sv = survivors.select("doc_id", "text", "n_tokens", "quality",
                           Q._tokens(F.col("text")).alias("__toks"))
     pairs = D.minhash_near_duplicates(
@@ -107,13 +98,11 @@ def curate_kept(docs: DataFrame, *, min_quality: float = 0.5,
 
 def curate_corpus(docs: DataFrame, *, min_quality: float = 0.5,
                   lang: str = "en", near_threshold: float = 0.5,
-                  prefix_len: int = 30,
-                  materialize: bool = True) -> DataFrame:
+                  prefix_len: int = 30) -> DataFrame:
     """(doc_id, text) -> curated (doc_id, n_tokens, quality, fingerprint):
     :func:`curate_kept` plus the fingerprint of every kept doc."""
     kept = curate_kept(docs, min_quality=min_quality, lang=lang,
-                       near_threshold=near_threshold, prefix_len=prefix_len,
-                       materialize=materialize)
+                       near_threshold=near_threshold, prefix_len=prefix_len)
     fp = Q.fingerprint(kept.select("doc_id", "__toks"), tokens_col="__toks")
     return (
         kept.select("doc_id", "n_tokens", "quality")

@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..staging import stage
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Give generation-heavy operators (shingle explode, token explode)
     enough input partitions to parallelize: a single-file corpus scans as
@@ -405,7 +408,6 @@ def positional_shingles(df: DataFrame, id_col: str = "doc_id",
 def duplicate_token_spans(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", n: int = 8,
                           max_docs_per_shingle: int = 50,
-                          materialize: bool = True,
                           verify: bool = True) -> DataFrame:
     """Substring-level exact dedup (the Lee et al. 2021 "Deduplicating
     Training Data Makes Language Models Better" capability, re-expressed as
@@ -426,7 +428,7 @@ def duplicate_token_spans(df: DataFrame, id_col: str = "doc_id",
          dedup.
       3. the hot-filtered match table (id, pos, h — 24 bytes/row, only
          occurrences of DUPLICATED shingles, tiny vs the corpus) is staged
-         to parquet once (``materialize=True``, the training_corpus
+         to parquet once (``staging.stage``, the training_corpus
          pattern): without the explicit boundary Catalyst re-derives it
          for BOTH self-join sides, i.e. three full corpus passes and the
          step-2 aggregate twice — measured in the r5 plan audit. Staged,
@@ -449,13 +451,7 @@ def duplicate_token_spans(df: DataFrame, id_col: str = "doc_id",
         .filter((F.col("nd") >= 2) & (F.col("nd") <= max_docs_per_shingle))
         .select("h")
     )
-    m = sh.join(hot, "h")
-    if materialize:
-        from ..staging import stage_dir
-
-        path = stage_dir("dup_span_matches")
-        m.write.mode("overwrite").parquet(path)
-        m = df.sparkSession.read.parquet(path)
+    m = stage(sh.join(hot, "h"), "dup_span_matches")
     a = m.select(F.col("id").alias("doc_a"), F.col("pos").alias("pa"), "h")
     b = m.select(F.col("id").alias("doc_b"), F.col("pos").alias("pb"), "h")
     pairs = (
@@ -476,8 +472,8 @@ def duplicate_token_spans(df: DataFrame, id_col: str = "doc_id",
         # (doc_a side, doc_b side) and Spark has no cross-branch subplan
         # CSE: without a boundary the whole self-join + gaps-and-islands
         # merge re-executes once per branch (seen in the r6 plan audit).
-        # The merged span table is tiny (pairs of maximal runs), so an
-        # eager localCheckpoint materializes it once for both branches.
+        # The merged span table is tiny (pairs of maximal runs): an eager
+        # localCheckpoint (measured faster than stage()) materializes it once.
         spans = spans.localCheckpoint(eager=True)
         spans = _verify_token_spans(spans, df, id_col, text_col)
     return spans

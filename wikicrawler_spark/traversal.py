@@ -128,13 +128,15 @@ def autosearch(spark, spans_df: DataFrame, start_doc: str, n: int = 3,
     Driver-side loop over tiny per-doc results — each hop is one small job;
     the corpus-wide analogue is the frontier loop (frontier.py).
     """
+    # every hop scans the title table: materialize it once per call. Not
+    # cache(): a cached table outlives the call and the next chain reuses it
     titles = spans_df.select(
         "doc_id",
         F.try_element_at(
             F.transform(F.filter("spans", lambda s: s["kind"] == F.lit("title")),
                         lambda s: s["text"]), F.lit(1),
         ).alias("title"),
-    ).cache()
+    ).localCheckpoint(eager=True)
 
     result = AutosearchResult()
     current = start_doc
