@@ -10,6 +10,8 @@ Two layers:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from wikicrawler_spark import corpus
@@ -263,15 +265,11 @@ def test_spark_partitioning_invariance(spark):
     assert outs[0] == outs[1]
 
 
-def test_extract_from_parquet_equals_extract_spans(spark, tmp_path):
-    """The scan-fused path (row-group splits read by pyarrow inside the
-    Arrow workers) must produce byte-identical spans to the declarative
-    spark.read.parquet -> extract_spans path, including across a shuffled
-    span order (the fused kernel's sortedness fast path must not change
-    results) and multi-file corpora."""
+@pytest.fixture(scope="module")
+def shuffled_corpus(spark, tmp_path_factory):
+    """The tiny corpus as 5 parquet files, about half its docs with their
+    spans in shuffled order, plus the declarative extraction of it."""
     import random
-
-    from wikicrawler_spark.kernel import extract_from_parquet
 
     docs = corpus.tiny_corpus()
     rng = random.Random(7)
@@ -281,15 +279,68 @@ def test_extract_from_parquet_equals_extract_spans(spark, tmp_path):
         if rng.random() < 0.5:
             rng.shuffle(spans)  # out-of-order offsets: forces the sort path
         rows.append((d["doc_id"], spans))
-    path = str(tmp_path / "corpus")
+    path = str(tmp_path_factory.mktemp("fused") / "corpus")
     spark.createDataFrame(rows, schema=corpus.DOC_SCHEMA) \
         .repartition(5).write.parquet(path)
-
     std = {r["doc_id"]: [tuple(s) for s in r["spans"]]
            for r in extract_spans(spark.read.parquet(path)).collect()}
+    return path, std
+
+
+@pytest.mark.parametrize("num_tasks", [1, 3, 5, 8, None])
+def test_extract_from_parquet_equals_extract_spans(spark, shuffled_corpus,
+                                                   num_tasks):
+    """The scan-fused path (row-group splits read by pyarrow inside the
+    Arrow workers) must produce byte-identical spans to the declarative
+    spark.read.parquet -> extract_spans path, including across a shuffled
+    span order (the fused kernel's sortedness fast path must not change
+    results) and multi-file corpora, with fewer, as many and more tasks
+    than splits."""
+    from wikicrawler_spark.kernel import extract_from_parquet
+
+    path, std = shuffled_corpus
     fused = {r["doc_id"]: [tuple(s) for s in r["spans"]]
-             for r in extract_from_parquet(spark, path, num_tasks=3).collect()}
+             for r in extract_from_parquet(spark, path,
+                                           num_tasks=num_tasks).collect()}
     assert fused == std
+
+
+def test_extract_from_parquet_empty_corpus(spark, tmp_path):
+    """A corpus directory written from a 0-row frame has no splits and
+    returns an empty frame of the extraction schema."""
+    from wikicrawler_spark.kernel import extract_from_parquet
+
+    path = str(tmp_path / "empty")
+    spark.createDataFrame([], corpus.DOC_SCHEMA).write.parquet(path)
+    out = extract_from_parquet(spark, path, num_tasks=4)
+    assert out.count() == 0
+    assert out.schema == extract_spans(spark.read.parquet(path)).schema
+
+
+def test_extract_from_parquet_balanced_placement(spark, tmp_path):
+    """Four equal single-row-group files on four tasks: each task reads
+    exactly one file, and the plan has no shuffle."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from wikicrawler_spark.kernel import extract_from_parquet
+
+    path = str(tmp_path / "corpus")
+    corpus.corpus_df(spark, 400, partitions=4).write.parquet(path)
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    file_rows = []
+    for f in files:
+        md = pq.ParquetFile(os.path.join(path, f)).metadata
+        assert md.num_row_groups == 1
+        file_rows.append(md.num_rows)
+    assert file_rows == [100] * 4
+
+    out = extract_from_parquet(spark, path, num_tasks=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    per_task = dict(out.groupBy(F.spark_partition_id().alias("p"))
+                    .count().collect())
+    assert [per_task.get(p, 0) for p in range(4)] == file_rows
 
 
 def test_latex_converter_extended_grammar():
