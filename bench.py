@@ -1,404 +1,199 @@
 #!/usr/bin/env python
-"""Benchmark harness (driver contract: prints ONE JSON line to stdout).
+"""North-rule scaling run: fused extraction submitted through
+``spark-submit --py-files`` at N and 4N cores.
 
-Two parts:
-  1. The north-rule scaling measurement: the SAME extraction job (synthetic
-     interleaved corpus, parquet on disk) at local[8] and local[32],
-     reporting docs/sec at both and efficiency = (thr_4N / thr_N) / 4.
-     Each parallelism level runs in its OWN subprocess (fresh JVM, no other
-     JVM alive) and times a steady-state pass (one full untimed warm pass
-     first — python-worker spawn and JIT are excluded, matching how a
-     long-running 1000-executor job behaves).
-  2. Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-     on local[$SPARK_GRAFT_CPUS] — per-query wall seconds.
+    python bench.py [--seed S]
 
-JSON shape:
-  {"metric": "extraction_docs_per_sec", "value": <thr@4N>, "unit": "sec",
-   "queries": {...per-query secs...}, "sf": 0.1,
-   "scaling": {"docs": N, "local8_docs_per_sec": ..., "local32_docs_per_sec":
-               ..., "efficiency": ...}}
+Zips ``wikicrawler_spark/``, writes one seeded ``corpus.corpus_df`` corpus
+of 4N parquet files, then submits
+
+    spark-submit --master local[k] --py-files <zip> bench.py --inner k <corpus>
+
+for k = N = max(1, nproc // 4) and k = 4N = nproc, the two levels
+alternating over ROUNDS rounds. Each submission runs one untimed warm pass
+and PASSES timed passes of ``kernel.extract_from_parquet`` with one task per
+file, so both levels run the same tasks. Every pass's
+``(count, bit_xor(xxhash64(doc_id, spans)))`` digest must equal the first.
+
+Prints one JSON line::
+
+    {"metric": "extraction_docs_per_sec", "value": <median docs/s at 4N>,
+     "unit": "docs/s", "correct": <every digest equal>,
+     "scaling": {"docs": ..., "levels": [N, 4N], "docs_per_s": {...},
+                 "efficiency": (median_4N / median_N) / (4N / N), ...}}
+
+A level's figure is the median over all its timed passes; no pass is
+re-run, dropped or capped. ``perfbench/run.py`` is the benchmark of record;
+this script is a thin CLI over its harness.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
+import signal
 import subprocess
 import sys
+import tempfile
 import time
+import zipfile
+
+from perfbench.harness import (
+    NPROC, become_subreaper, driver_memory, median, reap_descendants)
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "300000"))
-# corpus path embeds the doc count so a changed BENCH_DOCS never reuses
-# a stale cached corpus
-CORPUS_PATH = os.environ.get("SPARK_GRAFT_BENCH_CORPUS",
-                             f"/tmp/wcs_bench_corpus_{BENCH_DOCS}")
-
-HEADLINE = [
-    "extract_titles",          # full kernel pass (shares plan with all extract_*)
-    "word_freq",
-    "argmax_freq",
-    "bigram_collocations",
-    "trigram_collocations",
-    "ngram_jaccard",
-    "minhash_lsh_pairs",
-    "simhash",
-    "cosine_topk",
-    "lsh_ann_topk",
-    "embedding_near_dups_lsh",
-    "ivf_ann_recall",
-    "pdf_layout_spans",
-    "media_decode",            # multimodal decode plane (mapInPandas, r4)
-    "token_counts",
-    "quality_scores",
-    "language_id",
-    "fingerprint",
-    "tpch_q1",
-    "top_orders_per_customer",
-    "orders_by_nation",
-    "events_sessionize",
-    "sketch_accuracy",
-    "curate_corpus",
-    "dedup_clusters",
-    "pack_sequences",
-    "contamination_check",
-    "bm25_search",
-    "training_corpus",
-    "word_freq_treebank",       # vendored PTB-cascade backend (r5 parity row)
-    "sentence_sentiment",       # vendored-VADER scoring + A10 blend (r5)
-    "stream_windows_replay",    # watermarked event-time windows, replayed (r5)
-    "duplicate_spans",          # substring-level exact dedup (r5 second half)
-    "duplicate_span_removal",   # corpus rewrite consuming the span table (r5)
-    "semantic_dedup",           # SemDeDup survivor set over LSH blocking (r5)
-    "tpch_q3",                  # top-k join funnel (r5)
-    "tpch_q5",                  # multi-way star join (r5)
-    "tpch_q6",                  # pushdown/codegen probe (r5)
-    "span_clean_corpus",        # composed Lee-et-al. pipeline (r5 final)
-]
+DOCS_PER_FILE = 4000
+ROUNDS = 3
+#: timed passes per submission, after one warm pass
+PASSES = 3
 
 
-def make_session(master: str, shuffle_partitions: int):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(master)
-        .appName("wcs_bench")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+def zip_package(path: str) -> None:
+    """The package's ``.py`` files, as ``--py-files`` ships them."""
+    pkg = os.path.join(REPO, "wikicrawler_spark")
+    with zipfile.ZipFile(path, "w") as z:
+        for root, _, files in os.walk(pkg):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, REPO))
 
 
-def run_noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def gen_corpus(n_docs: int, path: str) -> None:
-    spark = make_session("local[32]", 32)
-    from wikicrawler_spark import corpus
-
-    # 8 docs per task x 32 cores-ish: 512 tasks keeps both 8- and 32-core
-    # runs busy with no straggler tail
-    corpus.corpus_df(spark, n_docs, partitions=512) \
-        .write.mode("overwrite").parquet(path)
-    spark.stop()
-
-
-def extract_run(cores: int, corpus_path: str) -> dict:
-    """Subprocess entry: time a steady-state extraction pass at
-    local[cores]. One full untimed pass warms JVM + python workers.
-
-    maxPartitionBytes is sized so the scan yields ~8 tasks/core: the default
-    128 MB packs this whole small-file corpus into a handful of read tasks
-    and starves the kernel stage of parallelism (the exact knob a real
-    cluster job tunes — SURVEY.md §2.1 S2)."""
-    spark = make_session(f"local[{cores}]", cores)
-    total_bytes = sum(
-        os.path.getsize(os.path.join(corpus_path, f))
-        for f in os.listdir(corpus_path) if f.endswith(".parquet")
-    )
-    target = max(total_bytes // (cores * 8), 256 * 1024)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    from wikicrawler_spark.kernel import extract_from_parquet, extract_spans
-
-    docs = spark.read.parquet(corpus_path)
-    n = docs.count()
-    n_tasks = cores * 8
-    # headline path: scan-fused extraction (row-group splits read by
-    # pyarrow INSIDE the Arrow workers — skips the JVM columnar->row->Arrow
-    # double conversion of the nested spans column; ~1.3x the declarative
-    # scan, equality pinned by tests). The declarative extract_spans path
-    # is timed separately once at 32 cores (see --extract-run-std).
-    def fused():
-        run_noop(extract_from_parquet(spark, corpus_path, num_tasks=n_tasks))
-
-    fused()  # warm pass (untimed): JVM + python workers + split listing
-    # the sandbox VM shows 1-7% steal time and noisy-neighbor swings;
-    # min over passes estimates uncontended throughput (the caller also
-    # min-merges across two interleaved subprocess rounds). r3: min-of-2
-    # timed passes — a single pass left the headline hostage to one bad
-    # scheduling window (observed ±25% on contended sessions).
-    secs = None
-    for _ in range(2):
-        t0 = time.monotonic()
-        fused()
-        dt = time.monotonic() - t0
-        secs = dt if secs is None else min(secs, dt)
-    out = {"cores": cores, "docs": n, "secs": round(secs, 3),
-           "tasks": n_tasks, "docs_per_sec": round(n / secs, 2)}
-    if cores == 32:  # declarative-scan passes for the fused-vs-std record
-        run_noop(extract_spans(docs))  # warm
-        std = None
-        for _ in range(2):  # min-of-2: single passes swing with host noise
-            t0 = time.monotonic()
-            run_noop(extract_spans(docs))
-            dt = time.monotonic() - t0
-            std = dt if std is None else min(std, dt)
-        out["std_docs_per_sec"] = round(n / std, 2)
-    spark.stop()
+def submit(zip_path: str, cores: int, corpus: str, work: str) -> dict:
+    """Run the inner job through spark-submit at ``local[cores]`` and return
+    its result line. The package must come from ``zip_path``."""
+    cmd = ["spark-submit", "--master", f"local[{cores}]",
+           "--driver-memory", driver_memory(),
+           "--conf", "spark.ui.enabled=false",
+           "--conf", "spark.ui.showConsoleProgress=false",
+           "--conf", f"spark.pyspark.python={sys.executable}",
+           "--conf", f"spark.local.dir={os.path.join(work, 'spark-local')}",
+           "--py-files", zip_path, os.path.join(REPO, "bench.py"),
+           "--inner", str(cores), corpus]
+    # run outside the repository, so no process finds the package there
+    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=work, timeout=900)
+    if proc.returncode != 0:
+        raise RuntimeError(f"local[{cores}] failed ({proc.returncode}): {proc.stderr[-2000:]}")
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    if not out["package"].startswith(zip_path):
+        raise RuntimeError(f"package imported from {out['package']}, not {zip_path}")
     return out
 
 
-def calibrate_cpu() -> dict:
-    """Measured hardware parallel capacity: pure-python burn at 8 vs 32
-    processes. The VM advertises 32 vCPUs but sustains ~half that under
-    full load (host oversubscription) — the Spark efficiency numbers must
-    be read against this ceiling, so it is measured and reported."""
-    import multiprocessing as mp
+def digest(spans_df) -> list[int]:
+    """``[count, bit_xor(xxhash64(doc_id, spans))]`` of an extraction result."""
+    from pyspark.sql import functions as F
 
-    def _rate(n: int) -> float:
-        with mp.Pool(n) as p:
-            t0 = time.monotonic()
-            p.map(_burn, range(n))
-            return n / (time.monotonic() - t0)
-
-    r8 = max(_rate(8) for _ in range(2))
-    r32 = max(_rate(32) for _ in range(2))
-    return {"burn_rate_8": round(r8, 2), "burn_rate_32": round(r32, 2),
-            "capacity_ratio_8_to_32": round(r32 / r8, 3)}
+    row = spans_df.agg(F.count("*"), F.expr("bit_xor(xxhash64(doc_id, spans))")).collect()[0]
+    return [row[0], row[1]]
 
 
-def _burn(_: int) -> int:
-    x = 0
-    for i in range(20_000_000):
-        x += i
-    return x
+def inner(cores: int, corpus: str) -> None:
+    """The submitted job: one warm and PASSES timed fused passes."""
+    # sys.path starts with this script's directory, the repository; drop
+    # it so the package resolves through --py-files
+    sys.path.remove(REPO)
+    from pyspark.sql import SparkSession
 
+    import wikicrawler_spark
+    from wikicrawler_spark.kernel import extract_from_parquet
 
-def _sub(args: list[str]) -> dict:
-    p = subprocess.run([sys.executable, os.path.abspath(__file__), *args],
-                       capture_output=True, text=True, cwd=REPO)
-    lines = [l for l in p.stdout.strip().splitlines() if l.startswith("{")]
-    if not lines:
-        raise RuntimeError(f"subprocess {args} failed: {p.stderr[-2000:]}")
-    return json.loads(lines[-1])
-
-
-def main() -> None:
-    if len(sys.argv) >= 2 and sys.argv[1] == "--extract-run":
-        print(json.dumps(extract_run(int(sys.argv[2]), sys.argv[3])))
-        return
-    if len(sys.argv) >= 2 and sys.argv[1] == "--gen-corpus":
-        gen_corpus(int(sys.argv[2]), sys.argv[3])
-        print(json.dumps({"ok": True}))
-        return
-
-    # -- part 1: scaling, fully isolated (no other JVM alive) --------------
-    # defensive: ALWAYS emit the JSON line, even if a stage fails — the
-    # driver records whatever this prints
-    scaling: dict = {"error": None}
-    try:
-        if not os.path.exists(os.path.join(CORPUS_PATH, "_SUCCESS")):
-            _sub(["--gen-corpus", str(BENCH_DOCS), CORPUS_PATH])
-        cal = calibrate_cpu()
-        # two interleaved rounds over the levels, min-merged per level: a
-        # noisy host window hits all levels equally instead of biasing one
-        best: dict[int, dict] = {}
-        pair_effs: dict[tuple[int, int], list[float]] = {(1, 4): [], (2, 8): []}
-
-        def _round_of(levels):
-            rnd = {}
-            for cores in levels:
-                r = _sub(["--extract-run", str(cores), CORPUS_PATH])
-                rnd[cores] = r
-                if cores not in best or r["secs"] < best[cores]["secs"]:
-                    best[cores] = r
-            for n, n4 in pair_effs:
-                if n in rnd and n4 in rnd:
-                    pair_effs[(n, n4)].append(
-                        ((rnd[n4]["docs_per_sec"] / rnd[n]["docs_per_sec"]) / 4.0,
-                         rnd[n]["docs_per_sec"]))
-
-        # Two N-vs-4N pairs, both inside the VM's real parallel capacity:
-        # (2,8) is the cluster-like headline pair; (1,4) sits deepest in
-        # the host's linear region and is the honest fallback when noisy
-        # neighbors eat the 8-core window (the job itself is one map-only
-        # stage — no serial section — so any linear-region pair measures
-        # the same property). All pairs are reported.
-        # Headline estimator: ratio of BEST-per-level throughput (min secs
-        # across rounds, i.e. each level's least-contended window), capped
-        # at 1.0. Under noise this can only understate (a level that never
-        # caught a quiet window lowers its own side of the ratio); the
-        # per-round paired ratios are kept as diagnostics — a max-of-
-        # paired-rounds headline turned out to SELECT upward noise
-        # (a contended small-N run in one round produced a >1 'efficiency').
-        def _eff(n, n4):
-            # best-per-level ratio: under noise this can only UNDERSTATE
-            # (a big-N level that never caught a quiet window drags its
-            # side down). Complement: per-round PAIRED ratios, but only
-            # rounds whose small-N leg reached >= 90% of the best-known
-            # small-N throughput — that validates the denominator, so a
-            # contended small-N run cannot inflate the ratio (the failure
-            # mode that made raw max-of-paired dishonest). Headline = max
-            # of the two, capped at 1.0.
-            per_level = (best[n4]["docs_per_sec"]
-                         / best[n]["docs_per_sec"]) / 4.0
-            floor = 0.9 * best[n]["docs_per_sec"]
-            validated = [e for e, small in pair_effs[(n, n4)]
-                         if small >= floor]
-            paired = max(validated, default=0.0)
-            return min(1.0, round(max(per_level, paired), 3))
-
-        for _ in range(2):
-            _round_of((1, 2, 4, 8, 32))
-        # up to two more rounds if the host was noisy throughout
-        for _ in range(2):
-            if max(_eff(1, 4), _eff(2, 8)) >= 0.8:
-                break
-            _round_of((1, 2, 4, 8))
-        # 32-core contention detector: a 32-core run slower than ~1.2x the
-        # 8-core run is physically impossible for this map-only job on an
-        # uncontended host (measured capacity ratio is 2-3x) — observed
-        # once when a whole bench window hit neighbor load and the
-        # headline landed at 0.85x of local[8]. Retry JUST the 32 level.
-        for _ in range(2):
-            if best[32]["docs_per_sec"] >= 1.2 * best[8]["docs_per_sec"]:
-                break
-            r = _sub(["--extract-run", "32", CORPUS_PATH])
-            if r["secs"] < best[32]["secs"]:
-                best[32] = r
-        r2, r8, r32 = best[2], best[8], best[32]
-        thr2, thr8, thr32 = (r["docs_per_sec"] for r in (r2, r8, r32))
-        eff_1_4 = _eff(1, 4)
-        eff_2_8 = _eff(2, 8)
-        eff_best = max(eff_1_4, eff_2_8)
-        best_pair = "2_to_8" if eff_2_8 >= eff_1_4 else "1_to_4"
-        scaling = {
-        "docs": r32["docs"],
-        "local2_docs_per_sec": thr2,
-        "local8_docs_per_sec": thr8,
-        "local8_secs": r8["secs"],
-        "local32_docs_per_sec": thr32,
-        "local32_secs": r32["secs"],
-        # declarative-scan (extract_spans over spark.read.parquet) at 32
-        # cores, for the fused-vs-std comparison; headline uses the fused
-        # scan (see extract_run)
-        "local32_std_scan_docs_per_sec": r32.get("std_docs_per_sec"),
-        "local1_docs_per_sec": best[1]["docs_per_sec"],
-        "local4_docs_per_sec": best[4]["docs_per_sec"],
-        # N-vs-4N pairs (paired per-round, best round), both inside the
-        # VM's REAL parallel capacity; headline = best linear-region pair
-        "efficiency_1_to_4": eff_1_4,
-            "efficiency_2_to_8": eff_2_8,
-        # N=8 vs 4N=32: raw, then normalized by the measured hardware
-        # ceiling (the VM sustains ~2x, not 4x, from 8->32 busy procs)
-        "efficiency_8_to_32_raw": round((thr32 / thr8) / 4.0, 3),
-        "efficiency_8_to_32_vs_hw_ceiling": round(
-            (thr32 / thr8) / cal["capacity_ratio_8_to_32"], 3),
-            "efficiency": eff_best,
-            "efficiency_pair": best_pair,
-            # (eff, small-N docs/s) per round: the small-N leg shows which
-            # rounds pass the 90%-of-best denominator validation
-            "paired_round_effs": {
-                f"{n}_to_{n4}": [[round(e, 3), round(s, 1)] for e, s in v]
-                for (n, n4), v in pair_effs.items()
-            },
-            "cpu_calibration": cal,
-        }
-    except Exception as e:  # noqa: BLE001
-        scaling = {"error": str(e)[:500]}
-        thr32 = 0.0
-
-    # -- part 2: headline queries at SF_DIR --------------------------------
-    from wikicrawler_spark import queries as Q
-
-    spark = make_session(f"local[{CPUS}]", CPUS)
-    sf = 0.1 if "sf0.1" in SF_DIR else (0.01 if "sf0.01" in SF_DIR else 0.001)
-    registry = Q.queries()
-    per_query: dict[str, float] = {}
-    # ROUND-interleaved best-of-2: two full passes over the list instead of
-    # two consecutive runs per query — a multi-minute neighbor-contention
-    # burst then hits each query once, not both of its samples (observed:
-    # minhash_lsh_pairs 58 s in one window vs 5.4 s same-code same-day)
-    for _ in range(2):
-        for name in HEADLINE:
-            fn = registry[name]
-            try:
-                t0 = time.monotonic()
-                run_noop(fn(spark, SF_DIR))
-                dt = round(time.monotonic() - t0, 3)
-                if name not in per_query or (0 < dt < per_query[name]) \
-                        or per_query[name] < 0:
-                    per_query[name] = dt
-            except Exception:  # noqa: BLE001
-                per_query.setdefault(name, -1.0)  # failed marker
-
-    # -- crawl headline (VERDICT r3 #6): fixed-seed 6-wave frontier run
-    # over the scaling corpus with full checkpointing — tracked per round
-    # so a frontier regression is visible, with wave metrics recorded.
-    # Run ONCE (not best-of-2): it is multi-action and ~2 min.
-    crawl_stats: dict = {"error": None}
-    try:
-        import shutil
-        import tempfile
-
-        from wikicrawler_spark import corpus as C
-        from wikicrawler_spark.frontier import crawl as run_crawl
-
-        if not os.path.exists(os.path.join(CORPUS_PATH, "_SUCCESS")):
-            _sub(["--gen-corpus", str(BENCH_DOCS), CORPUS_PATH])
-        docs = spark.read.parquet(CORPUS_PATH)
-        ck = tempfile.mkdtemp(prefix="wcs_bench_crawl_")
-        seeds = [C.doc_id_for("basic_article", 0),
-                 C.doc_id_for("media_interleaved", 0)]
+    spark = SparkSession.builder.appName(f"wcs_bench_{cores}").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    n_files = len([f for f in os.listdir(corpus) if f.endswith(".parquet")])
+    passes = []
+    for _ in range(1 + PASSES):
         t0 = time.monotonic()
-        res = run_crawl(spark, docs, seeds, max_waves=6, use_bloom=True,
-                        num_partitions=64, visited_buckets=32, ckpt_dir=ck)
-        n_visited = res.visited.count()
-        dt = round(time.monotonic() - t0, 3)
-        per_query["crawl_6waves"] = dt
-        crawl_stats = {"secs": dt, "visited": n_visited,
-                       "waves": res.waves, "wave_sizes": res.wave_sizes,
-                       "wave_stages": res.wave_stages,
-                       "docs": BENCH_DOCS, "seeds": seeds}
-        shutil.rmtree(ck, ignore_errors=True)
-    except Exception as e:  # noqa: BLE001
-        crawl_stats = {"error": str(e)[:300]}
-        per_query["crawl_6waves"] = -1.0
+        d = digest(extract_from_parquet(spark, corpus, num_tasks=n_files))
+        passes.append({"secs": time.monotonic() - t0, "digest": d})
     spark.stop()
+    print(json.dumps({"cores": cores, "package": wikicrawler_spark.__file__,
+                      "warm": passes[0], "timed": passes[1:]}))
 
-    print(json.dumps({
+
+def write_corpus(path: str, n_files: int, seed: int, work: str, zip_path: str) -> None:
+    from perfbench.harness import start_session, stop_session
+    from wikicrawler_spark import corpus
+
+    spark = start_session(NPROC, work)
+    try:
+        spark.sparkContext.addPyFile(zip_path)  # the generator runs in Python workers
+        corpus.corpus_df(spark, DOCS_PER_FILE * n_files, seed=seed,
+                         partitions=n_files).write.parquet(path)
+    finally:
+        stop_session(spark)
+
+
+def run(seed: int, work: str) -> dict:
+    levels = (max(1, NPROC // 4), NPROC)
+    n_docs = DOCS_PER_FILE * levels[1]
+    zip_path = os.path.join(work, "wikicrawler_spark.zip")
+    zip_package(zip_path)
+    corpus = os.path.join(work, "corpus")
+    write_corpus(corpus, levels[1], seed, work, zip_path)
+    reap_descendants()
+
+    rates: dict[int, list[float]] = {k: [] for k in levels}
+    digests = []
+    for _ in range(ROUNDS):
+        for k in levels:
+            out = submit(zip_path, k, corpus, work)
+            reap_descendants()  # nothing of one level runs during the next
+            rates[k] += [n_docs / p["secs"] for p in out["timed"]]
+            digests += [tuple(p["digest"]) for p in (out["warm"], *out["timed"])]
+
+    med = {k: median(v) for k, v in rates.items()}
+    lo, hi = levels
+    return {
         "metric": "extraction_docs_per_sec",
-        "value": thr32,
-        "unit": "sec",
-        "queries": per_query,
-        "sf": sf,
-        "scaling": scaling,
-        "crawl": crawl_stats,
-    }))
+        "value": round(med[hi], 1),
+        "unit": "docs/s",
+        "correct": digests[0][0] == n_docs and all(d == digests[0] for d in digests),
+        "scaling": {
+            "docs": n_docs,
+            "levels": list(levels),
+            "rounds": ROUNDS,
+            "passes": PASSES,
+            "docs_per_s": {str(k): round(v, 1) for k, v in med.items()},
+            "pass_docs_per_s": {str(k): [round(r, 1) for r in v] for k, v in rates.items()},
+            "efficiency": round((med[hi] / med[lo]) / (hi / lo), 3),
+        },
+    }
+
+
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--seed", type=int, default=1)
+    # internal: the submitted job at local[k] over a corpus directory
+    ap.add_argument("--inner", type=int, help=argparse.SUPPRESS)
+    ap.add_argument("corpus", nargs="?", help=argparse.SUPPRESS)
+    args = ap.parse_args(argv)
+    if args.inner:
+        inner(args.inner, args.corpus)
+        return 0
+
+    work = tempfile.mkdtemp(prefix="wcs_bench_")
+    try:
+        result = run(args.seed, work)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps(result))
+    return 0 if result["correct"] else 1
+
+
+def _exit_on_signal(signum, frame):
+    raise SystemExit(128 + signum)
 
 
 if __name__ == "__main__":
-    main()
+    # every process the run starts, each spark-submit JVM and the Python
+    # workers it forks included, has ended and been reaped before this one exits
+    become_subreaper()
+    signal.signal(signal.SIGTERM, _exit_on_signal)
+    try:
+        code = main()
+    finally:
+        reap_descendants()
+    sys.exit(code)

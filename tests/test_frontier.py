@@ -14,8 +14,9 @@ import pytest
 
 from wikicrawler_spark import corpus
 from wikicrawler_spark.bloom import NativeBloom
-from wikicrawler_spark.extract_job import links_of, run_extract
+from wikicrawler_spark.extract_job import links_of
 from wikicrawler_spark.frontier import crawl
+from wikicrawler_spark.kernel import extract_spans
 
 
 def expected_closure(seeds):
@@ -122,7 +123,7 @@ def test_resume_equals_uninterrupted(spark, graph_df, tmp_path, crawl_exact):
 
 
 def test_links_of_extraction(spark, graph_df):
-    spans = run_extract(spark, graph_df)
+    spans = extract_spans(graph_df)
     edges = {(r["src_doc_id"], r["dst_doc_id"]) for r in links_of(spans).collect()}
     want = set()
     for i in range(corpus.LINK_GRAPH_N):

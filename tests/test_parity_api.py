@@ -133,4 +133,3 @@ def test_engine_config_defaults():
 
     cfg = EngineConfig()
     assert cfg.shuffle_partitions > 0
-    assert cfg.bloom_fpr == 0.01

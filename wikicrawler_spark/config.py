@@ -20,13 +20,7 @@ class EngineConfig:
         default_factory=lambda: int(os.environ.get("WCS_SHUFFLE_PARTITIONS", "32")))
     driver_memory: str = field(
         default_factory=lambda: os.environ.get("WCS_DRIVER_MEM", "24g"))
-    latex: bool = False                 # E4 gate (grabber.py:177-180)
     arrow_max_records_per_batch: int = 2048  # giant-doc memory bound (§4.2)
-    bloom_fpr: float = 0.01
-    checkpoint_dir: str | None = None
-    max_waves: int = 100
-    per_wave_limit: int | None = None
-    kernel_partitions: int | None = None  # salted repartition width
 
 
 def build_session(cfg: EngineConfig | None = None, app: str = "wikicrawler_spark"):

@@ -1,5 +1,6 @@
 """The extract job: scan -> anti-join visited -> salted repartition ->
-kernel -> spans + metrics/lineage (SURVEY.md §3.2).
+kernel -> spans + metrics/lineage (SURVEY.md §3.2). Each crawl wave
+(``frontier.crawl``) composes these pieces with ``kernel.extract_spans``.
 
 This is the Spark re-expression of the reference's ``retrieve`` path
 (/root/reference/src/wikicrawler/core/grabber.py:159-199): cache-probe
@@ -25,18 +26,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .kernel import WIKI_BASE, extract_spans
+from .kernel import WIKI_BASE
 
 LINK_PREFIX = WIKI_BASE + "/wiki/"
 
 
-def anti_join_visited(docs: DataFrame, visited: DataFrame | None,
+def anti_join_visited(docs: DataFrame, visited: DataFrame,
                       bloom=None, spark=None) -> DataFrame:
     """Drop already-visited docs. A ``NativeBloom`` (if given) prunes
     cheaply first; the exact left_anti join is the authority (false
     positives from the Bloom would drop docs — never allowed)."""
-    if visited is None:
-        return docs
     if bloom is not None and spark is not None:
         # filter-based split: the big side never shuffles; only the tiny
         # maybe_seen branch (bloom true+false positives) pays the anti-join
@@ -92,14 +91,3 @@ def partition_metrics(spans_df: DataFrame, wave: int, wall_ms: int) -> DataFrame
         )
     )
 
-
-def run_extract(spark, docs: DataFrame, visited: DataFrame | None = None, *,
-                latex: bool = False, num_partitions: int | None = None,
-                salt: int = 0, bloom=None) -> DataFrame:
-    """One extraction pass: anti-join visited -> salted repartition ->
-    kernel. Lazy; callers materialize and call partition_metrics with their
-    measured wall clock."""
-    todo = anti_join_visited(docs, visited, bloom=bloom, spark=spark)
-    if num_partitions:
-        todo = salted_repartition(todo, num_partitions, salt=salt)
-    return extract_spans(todo, latex=latex)

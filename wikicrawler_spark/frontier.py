@@ -19,7 +19,7 @@ and metrics are appended per wave.
 Scale design notes:
   * The frontier is usually tiny relative to the corpus -> broadcast-join it
     into the docs scan (no shuffle of the big side). Above
-    ``broadcast_threshold`` rows it falls back to a shuffle hash join where
+    ``BROADCAST_THRESHOLD`` rows it falls back to a shuffle hash join where
     AQE handles skew splitting.
   * Hot-article fan-in (10^4 inlinks onto one "List of…" page) is defused
     BEFORE the anti-join by dropDuplicates on dst (map-side partial
@@ -42,10 +42,14 @@ from .extract_job import (
     anti_join_visited,
     links_of,
     partition_metrics,
-    run_extract,
     salted_repartition,
 )
+from .kernel import extract_spans
 from .schemas import LINEAGE_SCHEMA, VISITED_SCHEMA
+
+#: frontier rows up to which a wave broadcast-joins the frontier into the
+#: docs scan; a larger frontier takes a shuffle join
+BROADCAST_THRESHOLD = 1_000_000
 
 
 @dataclass
@@ -125,11 +129,7 @@ def crawl(
     ckpt_dir: str | None = None,
     resume: bool = False,
     use_bloom: bool = True,
-    bloom_fpr: float = 0.01,
     num_partitions: int | None = None,
-    broadcast_threshold: int = 1_000_000,
-    keep_spans: bool = True,
-    latex: bool = False,
     visited_buckets: int | None = None,
 ) -> CrawlResult:
     """Run the frontier BFS from ``seeds`` over the ``docs`` table.
@@ -160,8 +160,7 @@ def crawl(
                                 ("metrics", metrics_parts)):
                 p = _wave_dir(ckpt_dir, w, name)
                 if _is_complete(p):
-                    if name != "spans" or keep_spans:
-                        parts.append(spark.read.parquet(p))
+                    parts.append(spark.read.parquet(p))
     else:
         frontier = spark.createDataFrame(
             [(s, None) for s in seeds], "doc_id string, parent_doc_id string"
@@ -179,8 +178,7 @@ def crawl(
     if use_bloom:
         # JVM bit_or word aggregation build, codegen probe; the geometry
         # is fixed here so each wave ORs in only the new frontier
-        bloom = NativeBloom(max((n_visited_start + len(seeds)) * 8, 65536),
-                            bloom_fpr)
+        bloom = NativeBloom(max((n_visited_start + len(seeds)) * 8, 65536))
         if n_visited_start:
             bloom.merge_from(visited, "doc_id")
 
@@ -214,7 +212,7 @@ def crawl(
             wave_sizes.append(n_frontier)
 
             f_ids = frontier.select("doc_id").dropDuplicates()
-            join_side = F.broadcast(f_ids) if n_frontier <= broadcast_threshold else f_ids
+            join_side = F.broadcast(f_ids) if n_frontier <= BROADCAST_THRESHOLD else f_ids
             wave_docs = docs.join(join_side, "doc_id")
             if num_partitions:
                 # scale-adaptive task count (guide §2): a 2-doc seed wave
@@ -224,7 +222,7 @@ def crawl(
                 n_parts = max(1, min(num_partitions, (n_frontier + 3) // 4))
                 wave_docs = salted_repartition(wave_docs, n_parts, salt=wave)
 
-            spans = run_extract(spark, wave_docs)
+            spans = extract_spans(wave_docs)
 
             if ckpt_dir is not None:
                 spans_path = _wave_dir(ckpt_dir, wave, "spans")
@@ -235,8 +233,7 @@ def crawl(
                 # returned union all reuse it instead of re-running extraction
                 spans = spans.localCheckpoint(eager=True)
             _mark("spans")
-            if keep_spans:
-                spans_parts.append(spans)
+            spans_parts.append(spans)
 
             # next frontier: extracted wikilinks, deduped, minus visited ∪ current
             links = links_of(spans)  # (src_doc_id, dst_doc_id)

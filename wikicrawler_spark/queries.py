@@ -1616,8 +1616,8 @@ def q_embedding_near_dups_lsh(spark, sf_dir):
     pair set, but deterministic given the seeded hyperplanes, so the
     blocking itself replays in DuckDB (_oracle_emb_near_dups_lsh inlines
     the plane constants); q_embedding_near_dups_recall stays as the
-    recall-vs-exact gate. This is the member bench.py times — the exact
-    all-pairs member is O(n^2) by definition and exists for verification."""
+    recall-vs-exact gate. This is the scale member — the exact all-pairs
+    member is O(n^2) by definition and exists for verification."""
     emb = load(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
