@@ -20,11 +20,16 @@ Prints one JSON line::
     {"metric": "extraction_docs_per_sec", "value": <median docs/s at 4N>,
      "unit": "docs/s", "correct": <every digest equal>,
      "scaling": {"docs": ..., "levels": [N, 4N], "docs_per_s": {...},
-                 "efficiency": (median_4N / median_N) / (4N / N), ...}}
+                 "efficiency": (median_4N / median_N) / (4N / N),
+                 "cpu_s": {...}, "cores_used": {...}, ...}}
 
 A level's figure is the median over all its timed passes; no pass is
-re-run, dropped or capped. ``perfbench/run.py`` is the benchmark of record;
-this script is a thin CLI over its harness.
+re-run, dropped or capped. ``cpu_s`` lists, per level and submission, the
+user+system CPU seconds of the whole submission (the spark-submit JVM and
+every Python process under it, from ``getrusage(RUSAGE_CHILDREN)`` once all
+are reaped); ``cores_used`` is that over the submission's wall time.
+``perfbench/run.py`` is the benchmark of record; this script is a thin CLI
+over its harness.
 """
 
 from __future__ import annotations
@@ -32,6 +37,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import resource
 import shutil
 import signal
 import subprocess
@@ -126,6 +132,12 @@ def write_corpus(path: str, n_files: int, seed: int, work: str, zip_path: str) -
         stop_session(spark)
 
 
+def children_cpu_s() -> float:
+    """User+system CPU seconds of every descendant reaped so far."""
+    ru = resource.getrusage(resource.RUSAGE_CHILDREN)
+    return ru.ru_utime + ru.ru_stime
+
+
 def run(seed: int, work: str) -> dict:
     levels = (max(1, NPROC // 4), NPROC)
     n_docs = DOCS_PER_FILE * levels[1]
@@ -136,11 +148,17 @@ def run(seed: int, work: str) -> dict:
     reap_descendants()
 
     rates: dict[int, list[float]] = {k: [] for k in levels}
+    cpu_s: dict[int, list[float]] = {k: [] for k in levels}
+    cores_used: dict[int, list[float]] = {k: [] for k in levels}
     digests = []
     for _ in range(ROUNDS):
         for k in levels:
+            cpu0, t0 = children_cpu_s(), time.monotonic()
             out = submit(zip_path, k, corpus, work)
             reap_descendants()  # nothing of one level runs during the next
+            cpu, wall = children_cpu_s() - cpu0, time.monotonic() - t0
+            cpu_s[k].append(round(cpu, 2))
+            cores_used[k].append(round(cpu / wall, 2))
             rates[k] += [n_docs / p["secs"] for p in out["timed"]]
             digests += [tuple(p["digest"]) for p in (out["warm"], *out["timed"])]
 
@@ -159,6 +177,8 @@ def run(seed: int, work: str) -> dict:
             "docs_per_s": {str(k): round(v, 1) for k, v in med.items()},
             "pass_docs_per_s": {str(k): [round(r, 1) for r in v] for k, v in rates.items()},
             "efficiency": round((med[hi] / med[lo]) / (hi / lo), 3),
+            "cpu_s": {str(k): v for k, v in cpu_s.items()},
+            "cores_used": {str(k): v for k, v in cores_used.items()},
         },
     }
 

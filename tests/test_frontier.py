@@ -10,12 +10,16 @@ assertions.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 import pytest
 
 from wikicrawler_spark import corpus
 from wikicrawler_spark.bloom import NativeBloom
 from wikicrawler_spark.extract_job import links_of
-from wikicrawler_spark.frontier import crawl
+from wikicrawler_spark.frontier import CKPT_SCHEMAS, MANIFEST, crawl
 from wikicrawler_spark.kernel import extract_spans
 
 
@@ -120,6 +124,115 @@ def test_resume_equals_uninterrupted(spark, graph_df, tmp_path, crawl_exact):
     # recovered spans cover every visited doc exactly once
     span_docs = [r["doc_id"] for r in resumed.spans.select("doc_id").collect()]
     assert len(span_docs) == len(set(span_docs)) == len(want)
+
+
+@pytest.fixture(scope="module")
+def ckpt3(spark, graph_df, tmp_path_factory):
+    """A committed 3-wave checkpoint (waves 0-2) of the canonical crawl;
+    tests copy it before they resume from it."""
+    ck = str(tmp_path_factory.mktemp("frontier") / "ckpt3")
+    assert crawl(spark, graph_df, ids([0, 1]), max_waves=3, ckpt_dir=ck,
+                 use_bloom=False).waves == 3
+    return ck
+
+
+def _copy(ckpt: str, tmp_path) -> str:
+    ck = str(tmp_path / "ckpt")
+    shutil.copytree(ckpt, ck)
+    return ck
+
+
+#: what wave 2 has not yet committed when the crawl is killed right after
+#: each of its stages (stage names as in ``CrawlResult.wave_stages``); the
+#: bloom stage writes nothing, and the lineage/metrics writes start after it
+KILLED_AFTER = {
+    "count": ("spans", "lineage", "metrics", "next_frontier", "visited", MANIFEST),
+    "spans": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
+    "bloom": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
+    "frontier": ("visited", MANIFEST),
+    "visited": (MANIFEST,),
+}
+
+
+@pytest.mark.parametrize("use_bloom", [True, False], ids=["bloom", "exact"])
+@pytest.mark.parametrize("stage", list(KILLED_AFTER))
+def test_kill_and_resume_at_stage_boundary(spark, graph_df, ckpt3, tmp_path,
+                                           crawl_exact, stage, use_bloom):
+    """A crawl killed after any stage of its last wave resumes to the
+    uninterrupted crawl's visited set, re-running that wave, and its spans
+    cover each visited doc exactly once."""
+    ck = _copy(ckpt3, tmp_path)
+    wave2 = os.path.join(ck, "wave=00002")
+    for name in KILLED_AFTER[stage]:
+        path = os.path.join(wave2, name)
+        if name == "spans":
+            # killed mid-write: some part files, no _SUCCESS
+            os.remove(os.path.join(path, "_SUCCESS"))
+            for part in sorted(glob.glob(os.path.join(path, "part-*")))[1:]:
+                os.remove(part)
+        elif os.path.isdir(path):
+            shutil.rmtree(path)
+        else:
+            os.remove(path)
+
+    resumed = crawl(spark, graph_df, ids([0, 1]), max_waves=30, ckpt_dir=ck,
+                    resume=True, use_bloom=use_bloom)
+
+    assert resumed.wave_stages[0]["wave"] == 2
+    got = {(r["doc_id"], r["wave"]) for r in resumed.visited.collect()}
+    want = {(r["doc_id"], r["wave"]) for r in crawl_exact.visited.collect()}
+    assert got == want
+    span_docs = [r["doc_id"] for r in resumed.spans.select("doc_id").collect()]
+    assert len(span_docs) == len(set(span_docs))
+    assert set(span_docs) == {d for d, _ in want}
+
+
+def _run_in_job_group(spark, group: str, fn):
+    """``fn()``'s result and the stage names of each Spark job it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    return out, [[tracker.getStageInfo(s).name for s in tracker.getJobInfo(j).stageIds]
+                 for j in tracker.getJobIdsForGroup(group)]
+
+
+def test_resume_prologue_job_count(spark, graph_df, ckpt3, tmp_path):
+    """Resuming a 3-wave checkpoint with nothing left to run reads every
+    checkpointed table with its declared schema (no schema-inference job)
+    and takes the visited count from the manifest (no count job): the Bloom
+    filter's ``merge_from`` over the visited set is all it runs."""
+    ck = _copy(ckpt3, tmp_path)
+    res, prologue = _run_in_job_group(spark, "wcs-resume-prologue", lambda: crawl(
+        spark, graph_df, ids([0, 1]), max_waves=3, ckpt_dir=ck, resume=True,
+        use_bloom=True))
+    assert res.waves == 3 and res.wave_sizes == []
+    names = [n for job in prologue for n in job]
+    assert not [n for n in names if n.startswith("parquet at")], prologue
+    assert all("bloom.py" in n for n in names), prologue  # no count job
+    # the one Bloom merge_from, however many jobs the session's adaptive
+    # execution splits it into
+    _, merge = _run_in_job_group(spark, "wcs-merge-from", lambda: NativeBloom(
+        65536).merge_from(res.visited, "doc_id"))
+    assert len(prologue) <= len(merge), (prologue, merge)
+
+
+@pytest.mark.parametrize("name", list(CKPT_SCHEMAS))
+def test_checkpoint_schema_matches_declared(spark, ckpt3, name):
+    """Checkpoint reads declare their schema, and a column renamed or
+    retyped on the write side would read back as NULL without an error:
+    what each table holds on disk must equal its declared schema by field
+    name and data type."""
+    path = os.path.join(ckpt3, "wave=00002", name)
+    on_disk = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType.simpleString()) for f in on_disk] == \
+        [(f.name, f.dataType.simpleString()) for f in CKPT_SCHEMAS[name]]
 
 
 def test_links_of_extraction(spark, graph_df):

@@ -1,5 +1,5 @@
 """Reference-API parity tests: page-dict view, search routing, autosearch
-chain, markdown/media sinks, config/session (SURVEY.md §2.1/§2.4)."""
+chain, markdown/media sinks, state persistence (SURVEY.md §2.1/§2.4)."""
 
 from __future__ import annotations
 
@@ -126,10 +126,3 @@ def test_state_roundtrip(tmp_path):
     assert read_state(p) is None
     write_state(p, {"most_similar_colloc": "star cluster", "wave": 3})
     assert read_state(p) == {"most_similar_colloc": "star cluster", "wave": 3}
-
-
-def test_engine_config_defaults():
-    from wikicrawler_spark.config import EngineConfig
-
-    cfg = EngineConfig()
-    assert cfg.shuffle_partitions > 0

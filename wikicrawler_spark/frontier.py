@@ -11,10 +11,15 @@ Re-expresses the reference's recursive traversal (autosearch chain at
             -> frontier_{i+1};  visited ∪= frontier_i
 
 Each wave is one batch job; control crosses driver<->cluster once per wave.
-Checkpointing writes wave-numbered parquet directories whose ``_SUCCESS``
-markers emulate Iceberg's atomic snapshot commit (SURVEY §4.2 item 5);
-resume = read the last complete wave and continue. Per-partition lineage
-and metrics are appended per wave.
+Checkpointing writes one ``wave=NNNNN`` directory per wave, emulating
+Iceberg's atomic snapshot commit (SURVEY §4.2 item 5): a wave's snapshot
+commits when its ``next_frontier`` and ``visited`` tables both hold
+``_SUCCESS`` and its ``_manifest.json`` (the visited count) is in place,
+written last with an atomic rename. Resume reads the last committed wave and
+continues; a wave without a manifest re-runs. Every checkpoint read declares
+its schema from ``schemas.py``, so a read starts no schema-inference job, and
+the resumed visited count comes from the manifest, not a count job.
+Per-partition lineage and metrics are appended per wave.
 
 Scale design notes:
   * The frontier is usually tiny relative to the corpus -> broadcast-join it
@@ -25,6 +30,10 @@ Scale design notes:
     BEFORE the anti-join by dropDuplicates on dst (map-side partial
     aggregation collapses duplicates per partition) and the kernel stage is
     salted per wave (extract_job.salted_repartition).
+  * The kernel stage runs at most one round of tasks: no more tasks than
+    ``num_partitions``, the session's cores, or one per 4 frontier docs.
+    Every Python task pays a fixed start cost, so a second round on the
+    same cores buys nothing for a small frontier.
   * The per-wave cap uses sort-limit (deterministic: lowest doc_ids win),
     NOT a bare LIMIT whose row choice depends on partition order — resume
     and the two-parallelism bench must see identical waves.
@@ -32,6 +41,8 @@ Scale design notes:
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import time
 from dataclasses import dataclass, field
@@ -45,11 +56,29 @@ from .extract_job import (
     salted_repartition,
 )
 from .kernel import extract_spans
-from .schemas import LINEAGE_SCHEMA, VISITED_SCHEMA
+from .schemas import (
+    FRONTIER_SCHEMA,
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    SPANS_OUT_SCHEMA,
+    VISITED_SCHEMA,
+)
 
 #: frontier rows up to which a wave broadcast-joins the frontier into the
 #: docs scan; a larger frontier takes a shuffle join
 BROADCAST_THRESHOLD = 1_000_000
+
+#: declared schema of each table a wave checkpoints
+CKPT_SCHEMAS = {
+    "next_frontier": FRONTIER_SCHEMA,
+    "visited": VISITED_SCHEMA,
+    "spans": SPANS_OUT_SCHEMA,
+    "lineage": LINEAGE_SCHEMA,
+    "metrics": METRICS_SCHEMA,
+}
+
+#: per-wave manifest, written last: its presence commits the wave
+MANIFEST = "_manifest.json"
 
 
 @dataclass
@@ -77,18 +106,38 @@ def _is_complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _read(spark, ckpt_dir: str, wave: int, name: str) -> DataFrame:
+    """One checkpointed table, read with its declared schema (a parquet
+    read without one runs a schema-inference job)."""
+    return spark.read.schema(CKPT_SCHEMAS[name]).parquet(_wave_dir(ckpt_dir, wave, name))
+
+
+def _write_manifest(ckpt_dir: str, wave: int, manifest: dict) -> None:
+    """Commit ``wave``: write its manifest beside the committed tables, in
+    one atomic rename, so a reader sees the whole file or none."""
+    path = _wave_dir(ckpt_dir, wave, MANIFEST)
+    with open(path + ".tmp", "w") as f:
+        json.dump(manifest, f)
+    os.replace(path + ".tmp", path)
+
+
+def _read_manifest(ckpt_dir: str, wave: int) -> dict:
+    with open(_wave_dir(ckpt_dir, wave, MANIFEST)) as f:
+        return json.load(f)
+
+
 def last_complete_wave(ckpt_dir: str) -> int:
-    """Highest wave whose post-wave state (next_frontier AND visited)
-    committed — the _SUCCESS pair emulates an atomic snapshot commit."""
+    """Highest wave whose snapshot committed: next_frontier AND visited
+    hold ``_SUCCESS``, and the manifest written after them exists."""
     if not os.path.isdir(ckpt_dir):
         return -1
     best = -1
     for entry in os.listdir(ckpt_dir):
         if entry.startswith("wave="):
             w = int(entry.split("=")[1])
-            if _is_complete(_wave_dir(ckpt_dir, w, "next_frontier")) and _is_complete(
-                _wave_dir(ckpt_dir, w, "visited")
-            ):
+            if (_is_complete(_wave_dir(ckpt_dir, w, "next_frontier"))
+                    and _is_complete(_wave_dir(ckpt_dir, w, "visited"))
+                    and os.path.exists(_wave_dir(ckpt_dir, w, MANIFEST))):
                 best = max(best, w)
     return best
 
@@ -147,24 +196,23 @@ def crawl(
     wave_sizes: list[int] = []
     wave_stages: list[dict] = []
 
-    n_visited_start = 0
+    # rows in visited: the frontier is anti-joined against visited, so
+    # each wave adds exactly its frontier count; the manifest carries it
+    # across a resume
+    n_visited = 0
     if resume and ckpt_dir is not None and (lw := last_complete_wave(ckpt_dir)) >= 0:
-        frontier = spark.read.parquet(_wave_dir(ckpt_dir, lw, "next_frontier"))
-        visited = spark.read.parquet(_wave_dir(ckpt_dir, lw, "visited"))
+        frontier = _read(spark, ckpt_dir, lw, "next_frontier")
+        visited = _read(spark, ckpt_dir, lw, "visited")
+        n_visited = _read_manifest(ckpt_dir, lw)["visited"]
         start_wave = lw + 1
-        if use_bloom:
-            n_visited_start = visited.count()
         # recover already-committed per-wave outputs so the result is whole
         for w in range(lw + 1):
             for name, parts in (("spans", spans_parts), ("lineage", lineage_parts),
                                 ("metrics", metrics_parts)):
-                p = _wave_dir(ckpt_dir, w, name)
-                if _is_complete(p):
-                    parts.append(spark.read.parquet(p))
+                if _is_complete(_wave_dir(ckpt_dir, w, name)):
+                    parts.append(_read(spark, ckpt_dir, w, name))
     else:
-        frontier = spark.createDataFrame(
-            [(s, None) for s in seeds], "doc_id string, parent_doc_id string"
-        )
+        frontier = spark.createDataFrame([(s, None) for s in seeds], FRONTIER_SCHEMA)
         visited = spark.createDataFrame([], VISITED_SCHEMA)
 
     # One incremental Bloom filter for the whole crawl: capacity fixed up
@@ -178,8 +226,8 @@ def crawl(
     if use_bloom:
         # JVM bit_or word aggregation build, codegen probe; the geometry
         # is fixed here so each wave ORs in only the new frontier
-        bloom = NativeBloom(max((n_visited_start + len(seeds)) * 8, 65536))
-        if n_visited_start:
+        bloom = NativeBloom(max((n_visited + len(seeds)) * 8, 65536))
+        if n_visited:
             bloom.merge_from(visited, "doc_id")
 
     # aux writer pool: lineage/metrics appends run as concurrent Spark
@@ -218,8 +266,11 @@ def crawl(
                 # scale-adaptive task count (guide §2): a 2-doc seed wave
                 # must not fan into num_partitions near-empty kernel tasks
                 # (and as many checkpoint files); cap at ~4 docs/task and
-                # grow with the frontier up to the configured ceiling.
-                n_parts = max(1, min(num_partitions, (n_frontier + 3) // 4))
+                # grow with the frontier up to the configured ceiling, but
+                # never past one round of tasks on the session's cores
+                n_parts = max(1, min(num_partitions,
+                                     spark.sparkContext.defaultParallelism,
+                                     math.ceil(n_frontier / 4)))
                 wave_docs = salted_repartition(wave_docs, n_parts, salt=wave)
 
             spans = extract_spans(wave_docs)
@@ -227,7 +278,7 @@ def crawl(
             if ckpt_dir is not None:
                 spans_path = _wave_dir(ckpt_dir, wave, "spans")
                 spans.write.mode("overwrite").parquet(spans_path)
-                spans = spark.read.parquet(spans_path)
+                spans = _read(spark, ckpt_dir, wave, "spans")
             else:
                 # materialize the kernel output once — links_of, metrics and the
                 # returned union all reuse it instead of re-running extraction
@@ -272,7 +323,7 @@ def crawl(
                 # Per-wave snapshot commit. lineage/metrics are observability
                 # metadata — NOT needed for resume correctness (resume's
                 # authoritative state is the synchronous (next_frontier,
-                # visited) _SUCCESS pair; their recovery is already
+                # visited) _SUCCESS pair plus the manifest; their recovery is
                 # best-effort per `_is_complete`) and both derive from parquet
                 # already committed (frontier: previous wave; spans: above).
                 # Writing them inline cost ~0.5 s of serial job overhead each
@@ -286,7 +337,7 @@ def crawl(
                 _mark("aux_submit")
                 aux_waves.append(wave)
                 nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
-                nxt = spark.read.parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
+                nxt = _read(spark, ckpt_dir, wave, "next_frontier")
                 _mark("frontier")
                 if visited_buckets:
                     # bucketed-by-doc_id visited table: the NEXT wave's exact
@@ -305,7 +356,8 @@ def crawl(
                     )
                 else:
                     new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
-                    new_visited = spark.read.parquet(_wave_dir(ckpt_dir, wave, "visited"))
+                    new_visited = _read(spark, ckpt_dir, wave, "visited")
+                _write_manifest(ckpt_dir, wave, {"visited": n_visited + n_frontier})
                 _mark("visited")
             else:
                 # keep plans bounded without a checkpoint dir
@@ -323,6 +375,7 @@ def crawl(
                 lineage_parts.append(lineage)
                 metrics_parts.append(metrics)
             visited = new_visited
+            n_visited += n_frontier
             frontier = nxt
     finally:
         # join aux writers even when a wave step raises: the caller's
@@ -345,8 +398,8 @@ def crawl(
     # matching the docstring contract — and consumers don't re-execute the
     # lineage plan the aux write already evaluated
     for w in aux_waves:
-        lineage_parts.append(spark.read.parquet(_wave_dir(ckpt_dir, w, "lineage")))
-        metrics_parts.append(spark.read.parquet(_wave_dir(ckpt_dir, w, "metrics")))
+        lineage_parts.append(_read(spark, ckpt_dir, w, "lineage"))
+        metrics_parts.append(_read(spark, ckpt_dir, w, "metrics"))
 
     def _union(parts: list[DataFrame]) -> DataFrame | None:
         if not parts:

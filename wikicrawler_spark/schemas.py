@@ -59,6 +59,15 @@ VISITED_SCHEMA = T.StructType(
     ]
 )
 
+# One crawl wave's frontier: the docs to extract, each with the lowest-id
+# doc of the previous wave that links to it (NULL for a seed).
+FRONTIER_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("parent_doc_id", T.StringType(), True),
+    ]
+)
+
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("wave", T.IntegerType(), False),
