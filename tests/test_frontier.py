@@ -289,6 +289,21 @@ def test_bloom_sign_bit_word(spark):
     assert maybe.count() == 1
 
 
+def test_bloom_even_stride_sets_k_distinct_bits(spark):
+    """Double hashing h1 + i*h2 over a 64-bit filter: an even h2 would
+    cycle through at most 32 indices, so the k = 44 probes of one key
+    would set fewer than k bits. The stride is forced odd, so they set
+    exactly k distinct bits. This key's h2 mod 64 is 2 before the stride
+    is made odd."""
+    bf = NativeBloom(1)  # one 64-bit word
+    assert (bf.n_bits, bf.k) == (64, 44)
+    key = _ids_df(spark, ["wiki/even_stride_10"])
+    bf.merge_from(key, "doc_id")
+    assert bin(int(bf.words[0])).count("1") == bf.k
+    new, maybe = bf.split(key, "doc_id")
+    assert (new.count(), maybe.count()) == (0, 1)
+
+
 def test_hot_skew_fanout(spark):
     """FIXTURES hot_skew: a 'List of…' doc with 10^4 links must fan the
     frontier out to every target in one wave (link-dense paragraphs feed
@@ -313,26 +328,31 @@ def test_resume_with_bloom(spark, graph_df, tmp_path, crawl_exact):
     assert got == want
 
 
-def test_bucketed_visited_equals_plain_and_colocates(spark, graph_df,
+def test_visited_buckets_plain_snapshot_equals_exact(spark, graph_df,
                                                      tmp_path, crawl_exact):
-    """visited_buckets: same crawl result, and the anti-join against the
-    bucketed visited table needs NO exchange on the visited side (the probe
-    side shuffles into the bucket layout instead)."""
-    res = crawl(spark, graph_df, ids([0, 1]), max_waves=30, use_bloom=False,
-                ckpt_dir=str(tmp_path / "ck"), visited_buckets=4)
-    assert sorted(r["doc_id"] for r in res.visited.collect()) == \
-        sorted(r["doc_id"] for r in crawl_exact.visited.collect())
-    assert res.waves == crawl_exact.waves
+    """visited_buckets only sets each visited snapshot's part-file count:
+    the crawl equals the exact path, registers no catalog table, and a
+    same-session resume reads the same visited set."""
+    ck = str(tmp_path / "ck")
 
-    # plan audit: bucketed side joins without an Exchange even when
-    # broadcast is off (the growing-table side never reshuffles)
-    probe = spark.createDataFrame(
-        [(d,) for d in ids([0, 5, 7, 9999])], "doc_id string")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (probe.join(res.visited.select("doc_id"), "doc_id", "left_anti")
-                ._jdf.queryExecution().executedPlan().toString())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert plan.count("Exchange") == 1, plan  # probe side only
+    def tables():
+        return {t.name for t in spark.catalog.listTables()}
+
+    before = tables()
+    res = crawl(spark, graph_df, ids([0, 1]), max_waves=30, use_bloom=False,
+                ckpt_dir=ck, visited_buckets=4)
+    got = {(r["doc_id"], r["wave"]) for r in res.visited.collect()}
+    assert got == {(r["doc_id"], r["wave"])
+                   for r in crawl_exact.visited.collect()}
+    assert res.waves == crawl_exact.waves
+    assert tables() == before  # no wcs_visited_* (or any other) table
+
+    snapshots = sorted(glob.glob(os.path.join(ck, "wave=*", "visited")))
+    assert len(snapshots) == res.waves
+    for snap in snapshots:
+        assert 1 <= len(glob.glob(os.path.join(snap, "part-*"))) <= 4, snap
+
+    resumed = crawl(spark, graph_df, ids([0, 1]), max_waves=30,
+                    use_bloom=False, ckpt_dir=ck, resume=True,
+                    visited_buckets=4)
+    assert {(r["doc_id"], r["wave"]) for r in resumed.visited.collect()} == got

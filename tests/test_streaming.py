@@ -75,9 +75,6 @@ def test_stream_sessionize_equals_batch(spark, tmp_path):
     replay of the gap rule, with sessions CROSSING micro-batches (events
     split into time-ordered files, maxFilesPerTrigger=1 so state must
     carry the open session between batches)."""
-    import numpy as np
-    import pandas as pd
-
     from wikicrawler_spark.streaming import stream_sessionize
 
     ev = (
@@ -112,21 +109,19 @@ def test_stream_sessionize_equals_batch(spark, tmp_path):
     want = {}
     for user, g in ev.groupby("user_id"):
         g = g.sort_values(["ts", "event_id"])
-        last, sess, n, val = None, 0, 0, 0.0
+        last, sess, n, val = None, 0, 0, 0
         for t, v in zip(g["ts"].astype("int64") // 1000, g["value"]):
             if last is None or t - last > 1_800_000_000:
                 sess += 1
-                n, val = 0, 0.0
+                n, val = 0, 0
             n += 1
-            val += float(v)
+            val += int(round(float(v) * 1e6))
             last = t
             want[(user, sess)] = (n, val)
 
-    got = {(r.user_id, r.session_id): (r.n_events, r.session_value)
+    got = {(r.user_id, r.session_id): (r.n_events, r.session_value_micros)
            for r in final.itertuples()}
-    assert set(got) == set(want)
-    assert all(got[k][0] == want[k][0] for k in want)
-    assert all(np.isclose(got[k][1], want[k][1], atol=1e-9) for k in want)
+    assert got == want
 
 
 def test_stream_event_windows_watermark_drops_late(spark, tmp_path):

@@ -61,7 +61,9 @@ class NativeBloom:
 
     # h1/h2: two independent xxhash64 streams (the second seeded by an
     # extra literal), each reduced mod n_bits so the unrolled index
-    # arithmetic h1 + i*h2 stays far below 2^63 (ANSI-safe).
+    # arithmetic h1 + i*h2 stays far below 2^63 (ANSI-safe). h2 is odd:
+    # n_bits is a multiple of 64, so an even stride shortens the index
+    # cycle (h2 = 0 sets one bit k times); h2 | 1 stays < n_bits.
     def _with_hashes(self, df, column):
         from pyspark.sql import functions as F
 
@@ -69,7 +71,7 @@ class NativeBloom:
             "__h1", F.pmod(F.xxhash64(F.col(column)), F.lit(self.n_bits))
         ).withColumn(
             "__h2", F.pmod(F.xxhash64(F.col(column), F.lit(1)),
-                           F.lit(self.n_bits)))
+                           F.lit(self.n_bits)).bitwiseOR(F.lit(1)))
 
     def merge_from(self, df, column) -> "NativeBloom":
         """OR every value of ``df[column]`` into the bitmap: k exploded

@@ -10,8 +10,9 @@ becomes an idempotent append keyed by (doc_id, wave).
 
 Scale design:
   * The anti-join's visited side is the big shuffle risk at 10^12 docs —
-    AQE + the Bloom pre-filter (bloom.py) prune it; doc_id bucketing of the
-    visited table makes it a co-located join on a real cluster.
+    AQE + the Bloom pre-filter (bloom.py) prune it. The crawl probes
+    ``visited ∪ frontier``, a Union with no partitioning, so no file layout
+    of the visited snapshot saves that join its exchange.
   * Salted repartition spreads docs evenly before the Python stage: AQE can
     re-split skewed JOIN partitions but not a skewed UDF stage (SURVEY §4.2),
     and upstream partitioning (e.g. by crawl wave or by source bucket) is

@@ -19,6 +19,9 @@ written last with an atomic rename. Resume reads the last committed wave and
 continues; a wave without a manifest re-runs. Every checkpoint read declares
 its schema from ``schemas.py``, so a read starts no schema-inference job, and
 the resumed visited count comes from the manifest, not a count job.
+``visited`` is a plain parquet snapshot like every other table: the crawl
+registers nothing in the session catalog, so a same-session run and a
+fresh-session resume read identical snapshots.
 Per-partition lineage and metrics are appended per wave.
 
 Scale design notes:
@@ -34,6 +37,9 @@ Scale design notes:
     ``num_partitions``, the session's cores, or one per 4 frontier docs.
     Every Python task pays a fixed start cost, so a second round on the
     same cores buys nothing for a small frontier.
+  * The wave anti-joins its candidates against ``visited ∪ frontier``; the
+    Union carries no partitioning, so that join broadcasts or shuffles
+    both sides whatever the layout of the visited files.
   * The per-wave cap uses sort-limit (deterministic: lowest doc_ids win),
     NOT a bare LIMIT whose row choice depends on partition order — resume
     and the two-parallelism bench must see identical waves.
@@ -142,32 +148,6 @@ def last_complete_wave(ckpt_dir: str) -> int:
     return best
 
 
-def _write_visited_bucketed(spark, df: DataFrame, path: str,
-                            n_buckets: int, wave: int) -> DataFrame:
-    """Write visited as a Spark-native bucketed+sorted parquet table and
-    return the CATALOG-backed DataFrame (the bucketing spec only exists in
-    the catalog; reading the path directly would lose it). Table name is
-    derived from the checkpoint path so concurrent crawls don't collide."""
-    import re as _re
-
-    tbl = "wcs_visited_{}_{:05d}".format(
-        _re.sub(r"[^A-Za-z0-9]", "_", path)[-48:].strip("_"), wave
-    )
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        # repartition on the bucket key first: a bucketed write emits one
-        # file per (task, bucket) pair, so writing straight from the
-        # union's ~(buckets + frontier) partitions sprayed O(P x buckets)
-        # tiny files per wave (guide §6 small-files). Clustered by doc_id
-        # into n_buckets tasks it writes ~one file per bucket.
-        df.repartition(n_buckets, F.col("doc_id"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(n_buckets, "doc_id").sortBy("doc_id")
-        .option("path", path).saveAsTable(tbl)
-    )
-    return spark.table(tbl)
-
-
 def crawl(
     spark,
     docs: DataFrame,
@@ -186,6 +166,11 @@ def crawl(
     Returns visited/spans/lineage/metrics DataFrames (unioned across waves;
     when ``ckpt_dir`` is set they are re-read from the checkpoint parquet so
     the logical plan does not grow with wave count).
+
+    ``visited_buckets`` (with ``ckpt_dir``) hash-partitions each wave's
+    ``visited`` snapshot by ``doc_id`` into that many part files before the
+    write. It sets the snapshot's file count only and has no effect on
+    joins.
     """
     from .bloom import NativeBloom
 
@@ -340,23 +325,9 @@ def crawl(
                 nxt = _read(spark, ckpt_dir, wave, "next_frontier")
                 _mark("frontier")
                 if visited_buckets:
-                    # bucketed-by-doc_id visited table: the NEXT wave's exact
-                    # anti-join co-locates on the visited side (no exchange on
-                    # the table that grows without bound; only the tiny
-                    # maybe_seen probe shuffles into the bucket layout). In
-                    # production this is an Iceberg table with a bucket(doc_id)
-                    # partition transform — there the layout survives sessions;
-                    # parquet bucketing metadata lives in the session catalog,
-                    # so a RESUME in a fresh session reads the same files as
-                    # plain parquet (correct, just unbucketed until rewritten).
-                    new_visited = _write_visited_bucketed(
-                        spark, new_visited,
-                        _wave_dir(ckpt_dir, wave, "visited"),
-                        visited_buckets, wave,
-                    )
-                else:
-                    new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
-                    new_visited = _read(spark, ckpt_dir, wave, "visited")
+                    new_visited = new_visited.repartition(visited_buckets, "doc_id")
+                new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
+                new_visited = _read(spark, ckpt_dir, wave, "visited")
                 _write_manifest(ckpt_dir, wave, {"visited": n_visited + n_frontier})
                 _mark("visited")
             else:

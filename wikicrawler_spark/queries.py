@@ -2695,8 +2695,7 @@ def q_stream_sessionize_replay(spark, sf_dir):
     rn = F.row_number().over(Window.orderBy("ts", "event_id"))
     batched = e.withColumn("__b", F.floor((3 * rn - 1) / n).cast("int"))
     out = _replay(spark, batched, "sess",
-                  lambda src: stream_sessionize(src, micros_value=True),
-                  "update")
+                  stream_sessionize, "update")
     # a session's successive emissions have strictly increasing n_events,
     # so its final aggregate is the max-(n_events) row per key
     final = out.groupBy("user_id", "session_id").agg(

@@ -28,18 +28,16 @@ def stream_extract(
     output_dir: str,
     checkpoint_dir: str,
     *,
-    latex: bool = False,
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
     dedup_doc_ids: bool = False,
     dedup_watermark: str | None = None,
 ):
     """Incremental extraction: new doc parquet files -> span parquet.
 
-    Returns the started StreamingQuery. With ``available_now`` the query
-    drains everything currently present and stops at the next
-    ``awaitTermination()`` — the batch-like mode used in tests and backfills;
-    otherwise it runs continuously.
+    Returns the started StreamingQuery. It runs with the ``availableNow``
+    trigger: it drains every file present at start, then stops, so
+    ``awaitTermination()`` returns; a later call picks up only files that
+    arrived since (the checkpoint records what was read).
 
     ``dedup_doc_ids`` adds the built-in STATEFUL streaming dedup
     (dropDuplicates over the state store): a doc_id re-delivered in a later
@@ -65,16 +63,14 @@ def stream_extract(
                             watermark=dedup_watermark)
     elif dedup_doc_ids:
         docs = docs.dropDuplicates(["doc_id"])
-    spans = extract_spans(docs, latex=latex)
-    writer = (
-        spans.writeStream.format("parquet")
+    return (
+        extract_spans(docs).writeStream.format("parquet")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(stream_df, *, key_cols: list[str],
@@ -100,24 +96,11 @@ def stream_dedup(stream_df, *, key_cols: list[str],
             .drop("__ingest_ts"))
 
 
-def stream_span_rates(spark, input_dir: str, *, window: str = "10 seconds"):
-    """Processing-time span-rate monitor: per-kind counts over ingest-time
-    windows (the corpus carries no event time — SURVEY §2.5 notes the
-    reference has none either; ingest time is the only clock)."""
-    docs = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-    flat = docs.select(F.inline("spans")).withColumn("ingest_ts", F.current_timestamp())
-    return (
-        flat.withWatermark("ingest_ts", "0 seconds")
-        .groupBy(F.window("ingest_ts", window), "kind")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def stream_event_windows(events, *, window: str = "1 hour",
                          watermark: str = "30 minutes"):
     """EVENT-time windowed aggregation with a watermark — the late-data
-    contract the ingest-time monitor above can't express: per
-    (window, event_type) counts and value sums over the event's own ``ts``.
+    contract: per (window, event_type) counts and value sums over the
+    event's own ``ts``.
 
     Semantics (append mode): a window row is emitted exactly once, when
     the watermark (max event time seen minus ``watermark``) passes the
@@ -143,12 +126,11 @@ def stream_event_windows(events, *, window: str = "1 hour",
     )
 
 
-def stream_sessionize(events, *, gap_minutes: int = 30,
-                      micros_value: bool = False):
+def stream_sessionize(events, *, gap_minutes: int = 30):
     """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
     gap-based sessionization of an event stream — the streaming twin of the
-    batch ``queries.q_events_sessionize`` (same 30-min gap rule, same
-    (user_id, session_id, n_events, session_value) output).
+    batch ``queries.q_events_sessionize`` (same 30-min gap rule; output
+    (user_id, session_id, n_events, session_value_micros)).
 
     State per user: (last event time in micros, current session ordinal,
     its running count and value sum). Each micro-batch sorts its rows by
@@ -165,35 +147,29 @@ def stream_sessionize(events, *, gap_minutes: int = 30,
     watermark + window-based rewrite; the corpus carries no event-time
     semantics (SURVEY §2.5), so this operator pins the simple contract.
 
-    ``session_value`` is emitted unrounded (a float sum in event order);
-    the batch query rounds decimals — compare with a tolerance. With
-    ``micros_value=True`` the state accumulates integer MICRO-units of
-    ``value`` instead (exact for 6-decimal inputs) and the output column
-    is ``session_value_micros`` (int64) — this is what lets the driver
-    replay (queries.q_stream_sessionize_replay) hash-match the decimal
-    batch oracle with no tolerance.
+    The state accumulates ``value`` as integer MICRO-units (exact for
+    6-decimal inputs) and emits the sum as ``session_value_micros``
+    (int64) — this is what lets the stream replay
+    (queries.q_stream_sessionize_replay) hash-match the decimal batch
+    oracle with no tolerance.
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     key_type = events.schema["user_id"].dataType  # adopt the input's key type
-    val_field = ("session_value_micros", T.LongType()) if micros_value \
-        else ("session_value", T.DoubleType())
     out_type = T.StructType([
         T.StructField("user_id", key_type),
         T.StructField("session_id", T.LongType()),
         T.StructField("n_events", T.LongType()),
-        T.StructField(*val_field),
+        T.StructField("session_value_micros", T.LongType()),
     ])
     state_type = T.StructType([
         T.StructField("last_ts_us", T.LongType()),
         T.StructField("session_id", T.LongType()),
         T.StructField("n", T.LongType()),
-        T.StructField("val", T.LongType() if micros_value
-                      else T.DoubleType()),
+        T.StructField("val", T.LongType()),
     ])
     gap_us = gap_minutes * 60_000_000
-    zero = 0 if micros_value else 0.0
 
     def fn(key, pdfs, state):
         user = key[0]
@@ -204,23 +180,23 @@ def stream_sessionize(events, *, gap_minutes: int = 30,
         if state.exists:
             last_ts, sess, n, val = state.get
         else:
-            last_ts, sess, n, val = None, 0, 0, zero
+            last_ts, sess, n, val = None, 0, 0, 0
         changed: dict = {}
         ts_us = (ev["ts"].astype("int64") // 1000).tolist()
         for t, v in zip(ts_us, ev["value"].tolist()):
             if last_ts is None or t - last_ts > gap_us:
                 sess += 1
                 n = 0
-                val = zero
+                val = 0
             n += 1
-            val += int(round(float(v) * 1_000_000)) if micros_value \
-                else float(v)
+            val += int(round(float(v) * 1_000_000))
             last_ts = t
             changed[sess] = (n, val)
         state.update((last_ts, sess, n, val))
         yield pd.DataFrame(
             [(user, s, c, v) for s, (c, v) in sorted(changed.items())],
-            columns=["user_id", "session_id", "n_events", val_field[0]],
+            columns=["user_id", "session_id", "n_events",
+                     "session_value_micros"],
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
