@@ -11,9 +11,11 @@ assertions.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from wikicrawler_spark import corpus
@@ -142,13 +144,15 @@ def _copy(ckpt: str, tmp_path) -> str:
     return ck
 
 
-#: what wave 2 has not yet committed when the crawl is killed right after
-#: each of its stages (stage names as in ``CrawlResult.wave_stages``); the
-#: bloom stage writes nothing, and the lineage/metrics writes start after it
+#: what wave 2 has not yet committed when the crawl is killed at its start
+#: or right after each of its stages (stage names as in
+#: ``CrawlResult.wave_stages``); the bloom stage writes nothing, and the
+#: lineage/metrics writes submitted at aux_submit may finish before the kill
 KILLED_AFTER = {
-    "count": ("spans", "lineage", "metrics", "next_frontier", "visited", MANIFEST),
+    "start": ("spans", "lineage", "metrics", "next_frontier", "visited", MANIFEST),
     "spans": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
     "bloom": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
+    "aux_submit": ("next_frontier", "visited", MANIFEST),
     "frontier": ("visited", MANIFEST),
     "visited": (MANIFEST,),
 }
@@ -160,7 +164,7 @@ def test_kill_and_resume_at_stage_boundary(spark, graph_df, ckpt3, tmp_path,
                                            crawl_exact, stage, use_bloom):
     """A crawl killed after any stage of its last wave resumes to the
     uninterrupted crawl's visited set, re-running that wave, and its spans
-    cover each visited doc exactly once."""
+    and lineage cover each visited doc exactly once."""
     ck = _copy(ckpt3, tmp_path)
     wave2 = os.path.join(ck, "wave=00002")
     for name in KILLED_AFTER[stage]:
@@ -185,6 +189,8 @@ def test_kill_and_resume_at_stage_boundary(spark, graph_df, ckpt3, tmp_path,
     span_docs = [r["doc_id"] for r in resumed.spans.select("doc_id").collect()]
     assert len(span_docs) == len(set(span_docs))
     assert set(span_docs) == {d for d, _ in want}
+    lineage_docs = sorted(r["doc_id"] for r in resumed.lineage.collect())
+    assert lineage_docs == sorted(d for d, _ in want)
 
 
 def _run_in_job_group(spark, group: str, fn):
@@ -221,6 +227,64 @@ def test_resume_prologue_job_count(spark, graph_df, ckpt3, tmp_path):
     _, merge = _run_in_job_group(spark, "wcs-merge-from", lambda: NativeBloom(
         65536).merge_from(res.visited, "doc_id"))
     assert len(prologue) <= len(merge), (prologue, merge)
+
+
+def test_resumed_wave_takes_its_size_from_the_commit(spark, graph_df, ckpt3,
+                                                     tmp_path, monkeypatch):
+    """A resumed wave's size comes from the ``next_frontier`` footers that
+    the previous wave committed, and the next one's from its own commit:
+    the crawl runs no ``DataFrame.count`` job."""
+    ck = _copy(ckpt3, tmp_path)
+    rows = sum(pq.read_metadata(f).num_rows for f in
+               glob.glob(os.path.join(ck, "wave=00002", "next_frontier", "part-*")))
+
+    def no_count(self):
+        raise AssertionError("crawl ran a count job")
+
+    # the session's concrete DataFrame class, which defines count()
+    monkeypatch.setattr(type(graph_df), "count", no_count)
+    res = crawl(spark, graph_df, ids([0, 1]), max_waves=4, ckpt_dir=ck,
+                resume=True, use_bloom=False)
+    monkeypatch.undo()
+    assert res.waves == 4
+    assert res.wave_sizes == [rows] and rows > 0
+    assert res.visited.count() == _manifest_visited(
+        os.path.join(ck, "wave=00003", MANIFEST))
+
+
+def _manifest_visited(path: str) -> int:
+    with open(path) as f:
+        return json.load(f)["visited"]
+
+
+def _visited_facts(res, ck):
+    """(doc_id, wave) set, visited row count and last manifest count of a
+    crawl checkpointed at ``ck``."""
+    rows = [(r["doc_id"], r["wave"]) for r in res.visited.collect()]
+    manifest = sorted(glob.glob(os.path.join(ck, "wave=*", MANIFEST)))[-1]
+    return set(rows), len(rows), _manifest_visited(manifest)
+
+
+@pytest.mark.parametrize("seeds, same_as", [([0, 0, 1], [0, 1]), ([], None)],
+                         ids=["duplicate_seeds", "no_seeds"])
+def test_degenerate_seeds(spark, graph_df, tmp_path, seeds, same_as):
+    """A seed listed twice is one doc, visited once in wave 0; no seeds
+    give an empty crawl whose result tables are empty DataFrames with
+    their declared schemas."""
+    res = crawl(spark, graph_df, ids(seeds), max_waves=2,
+                ckpt_dir=str(tmp_path / "a"), use_bloom=False)
+    if same_as is None:
+        assert (res.waves, res.wave_sizes) == (0, [])
+        for name in ("visited", "spans", "lineage", "metrics"):
+            df = getattr(res, name)
+            assert df.schema == CKPT_SCHEMAS[name], name
+            assert df.count() == 0, name
+        return
+    want = crawl(spark, graph_df, ids(same_as), max_waves=2,
+                 ckpt_dir=str(tmp_path / "b"), use_bloom=False)
+    assert res.wave_sizes == want.wave_sizes
+    assert _visited_facts(res, str(tmp_path / "a")) == \
+        _visited_facts(want, str(tmp_path / "b"))
 
 
 @pytest.mark.parametrize("name", list(CKPT_SCHEMAS))

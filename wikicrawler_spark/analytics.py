@@ -150,14 +150,6 @@ def filtered_tokens_col(tokens: Column) -> Column:
     )
 
 
-def with_body(spans_df: DataFrame) -> DataFrame:
-    """(doc_id, spans) -> + body, sentences, tokens, filtered_tokens."""
-    df = spans_df.withColumn("body", body_col(F.col("spans")))
-    df = df.withColumn("sentences", sentences_col(F.col("body")))
-    df = df.withColumn("tokens", tokens_col(F.col("body")))
-    return df.withColumn("filtered_tokens", filtered_tokens_col(F.col("tokens")))
-
-
 # ------------------------------------------------------- frequencies (A5, A13)
 
 def word_freq(doc_text_df: DataFrame, text_col: str = "body") -> DataFrame:

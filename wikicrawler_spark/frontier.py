@@ -11,18 +11,19 @@ Re-expresses the reference's recursive traversal (autosearch chain at
             -> frontier_{i+1};  visited ∪= frontier_i
 
 Each wave is one batch job; control crosses driver<->cluster once per wave.
-Checkpointing writes one ``wave=NNNNN`` directory per wave, emulating
-Iceberg's atomic snapshot commit (SURVEY §4.2 item 5): a wave's snapshot
-commits when its ``next_frontier`` and ``visited`` tables both hold
+Every wave commits a snapshot: one ``wave=NNNNN`` directory per wave under
+``ckpt_dir`` (a staging dir removed at interpreter exit when none is given),
+emulating Iceberg's atomic snapshot commit (SURVEY §4.2 item 5). A wave's
+snapshot commits when its ``next_frontier`` and ``visited`` tables both hold
 ``_SUCCESS`` and its ``_manifest.json`` (the visited count) is in place,
 written last with an atomic rename. Resume reads the last committed wave and
 continues; a wave without a manifest re-runs. Every checkpoint read declares
-its schema from ``schemas.py``, so a read starts no schema-inference job, and
-the resumed visited count comes from the manifest, not a count job.
-``visited`` is a plain parquet snapshot like every other table: the crawl
-registers nothing in the session catalog, so a same-session run and a
-fresh-session resume read identical snapshots.
-Per-partition lineage and metrics are appended per wave.
+its schema from ``schemas.py``, so a read starts no schema-inference job,
+and no job counts rows: the visited count comes from the manifest, the next
+wave's size from the ``next_frontier`` parquet footers. ``visited`` is a
+plain parquet snapshot like every other table, and the crawl registers
+nothing in the session catalog. The returned spans, lineage and metrics are
+read once, at the end, from the snapshot set of the committed waves.
 
 Scale design notes:
   * The frontier is usually tiny relative to the corpus -> broadcast-join it
@@ -47,14 +48,17 @@ Scale design notes:
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import staging
 from .extract_job import (
     anti_join_visited,
     links_of,
@@ -91,16 +95,16 @@ MANIFEST = "_manifest.json"
 class CrawlResult:
     waves: int
     visited: DataFrame
-    spans: DataFrame | None
-    lineage: DataFrame | None
-    metrics: DataFrame | None
+    spans: DataFrame
+    lineage: DataFrame
+    metrics: DataFrame
     wave_sizes: list = field(default_factory=list)
     #: per-wave stage walls (seconds), one dict per wave run here:
-    #: count / spans(kernel+write) / bloom / frontier(links+anti-join+write)
-    #: / visited(write), plus, with a ckpt_dir, a near-zero 'aux_submit'
-    #: wall for the lineage+metrics checkpoint writes (they run on the aux
-    #: pool and are joined before crawl() returns) — the crawl's own cost
-    #: breakdown, so checkpoint tax vs compute is measurable per run
+    #: spans(kernel+write) / bloom / aux_submit (a near-zero wall: the
+    #: lineage+metrics writes run on the aux pool and are joined before
+    #: crawl() returns) / frontier(links+anti-join+write) / visited(write)
+    #: — the crawl's own cost breakdown, so checkpoint tax vs compute is
+    #: measurable per run
     wave_stages: list = field(default_factory=list)
 
 
@@ -116,6 +120,25 @@ def _read(spark, ckpt_dir: str, wave: int, name: str) -> DataFrame:
     """One checkpointed table, read with its declared schema (a parquet
     read without one runs a schema-inference job)."""
     return spark.read.schema(CKPT_SCHEMAS[name]).parquet(_wave_dir(ckpt_dir, wave, name))
+
+
+def _rows(ckpt_dir: str, wave: int, name: str) -> int:
+    """Row count of one committed table, summed from its parquet footers
+    on the driver: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows
+               for f in glob.glob(os.path.join(_wave_dir(ckpt_dir, wave, name), "part-*")))
+
+
+def _read_waves(spark, ckpt_dir: str, waves: int, name: str) -> DataFrame:
+    """One table of waves ``0 .. waves-1`` read as one scan. Lineage and
+    metrics are best-effort (a crawl killed after a wave's commit may not
+    have written them), so only tables holding ``_SUCCESS`` are read."""
+    paths = [p for w in range(waves) if _is_complete(p := _wave_dir(ckpt_dir, w, name))]
+    if not paths:
+        return spark.createDataFrame([], CKPT_SCHEMAS[name])
+    return spark.read.schema(CKPT_SCHEMAS[name]).parquet(*paths)
 
 
 def _write_manifest(ckpt_dir: str, wave: int, manifest: dict) -> None:
@@ -163,21 +186,23 @@ def crawl(
 ) -> CrawlResult:
     """Run the frontier BFS from ``seeds`` over the ``docs`` table.
 
-    Returns visited/spans/lineage/metrics DataFrames (unioned across waves;
-    when ``ckpt_dir`` is set they are re-read from the checkpoint parquet so
-    the logical plan does not grow with wave count).
+    Returns visited/spans/lineage/metrics DataFrames read back from the
+    committed snapshots of waves ``0 .. waves-1``, so the logical plan does
+    not grow with wave count. Without ``ckpt_dir`` the snapshots go to a
+    staging dir (``staging.stage_dir``), and ``resume`` has nothing to
+    resume from.
 
-    ``visited_buckets`` (with ``ckpt_dir``) hash-partitions each wave's
-    ``visited`` snapshot by ``doc_id`` into that many part files before the
-    write. It sets the snapshot's file count only and has no effect on
-    joins.
+    ``visited_buckets`` hash-partitions each wave's ``visited`` snapshot by
+    ``doc_id`` into that many part files before the write. It sets the
+    snapshot's file count only and has no effect on joins.
     """
     from .bloom import NativeBloom
 
+    if ckpt_dir is None:
+        ckpt_dir = staging.stage_dir("crawl")
+    # a seed listed twice is one doc: it is visited once, in wave 0
+    seeds = list(dict.fromkeys(seeds))
     start_wave = 0
-    spans_parts: list[DataFrame] = []
-    lineage_parts: list[DataFrame] = []
-    metrics_parts: list[DataFrame] = []
     wave_sizes: list[int] = []
     wave_stages: list[dict] = []
 
@@ -185,19 +210,15 @@ def crawl(
     # each wave adds exactly its frontier count; the manifest carries it
     # across a resume
     n_visited = 0
-    if resume and ckpt_dir is not None and (lw := last_complete_wave(ckpt_dir)) >= 0:
+    if resume and (lw := last_complete_wave(ckpt_dir)) >= 0:
         frontier = _read(spark, ckpt_dir, lw, "next_frontier")
+        n_frontier = _rows(ckpt_dir, lw, "next_frontier")
         visited = _read(spark, ckpt_dir, lw, "visited")
         n_visited = _read_manifest(ckpt_dir, lw)["visited"]
         start_wave = lw + 1
-        # recover already-committed per-wave outputs so the result is whole
-        for w in range(lw + 1):
-            for name, parts in (("spans", spans_parts), ("lineage", lineage_parts),
-                                ("metrics", metrics_parts)):
-                if _is_complete(_wave_dir(ckpt_dir, w, name)):
-                    parts.append(_read(spark, ckpt_dir, w, name))
     else:
         frontier = spark.createDataFrame([(s, None) for s in seeds], FRONTIER_SCHEMA)
+        n_frontier = len(seeds)
         visited = spark.createDataFrame([], VISITED_SCHEMA)
 
     # One incremental Bloom filter for the whole crawl: capacity fixed up
@@ -215,19 +236,19 @@ def crawl(
         if n_visited:
             bloom.merge_from(visited, "doc_id")
 
-    # aux writer pool: lineage/metrics appends run as concurrent Spark
+    # aux writer pool: lineage/metrics writes run as concurrent Spark
     # jobs (scheduler-safe); drained in the finally below so a wave-loop
     # exception never leaves writes racing the caller's teardown, and
     # joined on the success path where a failed aux write re-raises
-    from concurrent.futures import ThreadPoolExecutor
-
     aux_pool = ThreadPoolExecutor(max_workers=2,
                                   thread_name_prefix="wcs-crawl-aux")
     aux_futures: list = []
-    aux_waves: list[int] = []  # waves whose lineage/metrics went to ckpt
 
     try:
         for wave in range(start_wave, max_waves):
+            if n_frontier == 0:
+                break
+            wave_sizes.append(n_frontier)
             t0 = time.monotonic()
             stages: dict = {}
             _t = t0
@@ -238,13 +259,9 @@ def crawl(
                 stages[name] = round(now - _t, 3)
                 _t = now
 
-            n_frontier = frontier.count()
-            _mark("count")
-            if n_frontier == 0:
-                break
-            wave_sizes.append(n_frontier)
-
-            f_ids = frontier.select("doc_id").dropDuplicates()
+            # unique by construction: seeds are deduped, and each next
+            # frontier is one row per grouped dst_doc_id
+            f_ids = frontier.select("doc_id")
             join_side = F.broadcast(f_ids) if n_frontier <= BROADCAST_THRESHOLD else f_ids
             wave_docs = docs.join(join_side, "doc_id")
             if num_partitions:
@@ -258,18 +275,10 @@ def crawl(
                                      math.ceil(n_frontier / 4)))
                 wave_docs = salted_repartition(wave_docs, n_parts, salt=wave)
 
-            spans = extract_spans(wave_docs)
-
-            if ckpt_dir is not None:
-                spans_path = _wave_dir(ckpt_dir, wave, "spans")
-                spans.write.mode("overwrite").parquet(spans_path)
-                spans = _read(spark, ckpt_dir, wave, "spans")
-            else:
-                # materialize the kernel output once — links_of, metrics and the
-                # returned union all reuse it instead of re-running extraction
-                spans = spans.localCheckpoint(eager=True)
+            extract_spans(wave_docs).write.mode("overwrite").parquet(
+                _wave_dir(ckpt_dir, wave, "spans"))
+            spans = _read(spark, ckpt_dir, wave, "spans")
             _mark("spans")
-            spans_parts.append(spans)
 
             # next frontier: extracted wikilinks, deduped, minus visited ∪ current
             links = links_of(spans)  # (src_doc_id, dst_doc_id)
@@ -304,50 +313,34 @@ def crawl(
                 frontier.select("doc_id", F.lit(wave).cast("int").alias("wave"))
             )
 
-            if ckpt_dir is not None:
-                # Per-wave snapshot commit. lineage/metrics are observability
-                # metadata — NOT needed for resume correctness (resume's
-                # authoritative state is the synchronous (next_frontier,
-                # visited) _SUCCESS pair plus the manifest; their recovery is
-                # best-effort per `_is_complete`) and both derive from parquet
-                # already committed (frontier: previous wave; spans: above).
-                # Writing them inline cost ~0.5 s of serial job overhead each
-                # per wave (measured r5, BENCH/BASELINE.md crawl breakdown), so
-                # they append ASYNCHRONOUSLY on the aux pool; futures join
-                # before the crawl returns, failures re-raise there (r4 ask #6).
-                for name, df in (("lineage", lineage), ("metrics", metrics)):
-                    aux_futures.append(aux_pool.submit(
-                        lambda d=df, p=_wave_dir(ckpt_dir, wave, name):
-                        d.write.mode("overwrite").parquet(p)))
-                _mark("aux_submit")
-                aux_waves.append(wave)
-                nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
-                nxt = _read(spark, ckpt_dir, wave, "next_frontier")
-                _mark("frontier")
-                if visited_buckets:
-                    new_visited = new_visited.repartition(visited_buckets, "doc_id")
-                new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
-                new_visited = _read(spark, ckpt_dir, wave, "visited")
-                _write_manifest(ckpt_dir, wave, {"visited": n_visited + n_frontier})
-                _mark("visited")
-            else:
-                # keep plans bounded without a checkpoint dir
-                nxt = nxt.localCheckpoint(eager=True)
-                _mark("frontier")
-                new_visited = new_visited.localCheckpoint(eager=True)
-                _mark("visited")
+            # Snapshot commit. lineage/metrics are observability metadata —
+            # NOT needed for resume (its state is the synchronous
+            # (next_frontier, visited) _SUCCESS pair plus the manifest) — and
+            # both derive from parquet already committed (frontier: previous
+            # wave; spans: above). Written inline they cost ~0.5 s of serial
+            # job overhead each per wave (measured r5, BENCH/BASELINE.md
+            # crawl breakdown), so they write on the aux pool; futures join
+            # before the crawl returns, failures re-raise there.
+            for name, df in (("lineage", lineage), ("metrics", metrics)):
+                aux_futures.append(aux_pool.submit(
+                    lambda d=df, p=_wave_dir(ckpt_dir, wave, name):
+                    d.write.mode("overwrite").parquet(p)))
+            _mark("aux_submit")
+            nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
+            frontier = _read(spark, ckpt_dir, wave, "next_frontier")
+            _mark("frontier")
+            if visited_buckets:
+                new_visited = new_visited.repartition(visited_buckets, "doc_id")
+            new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
+            visited = _read(spark, ckpt_dir, wave, "visited")
+            n_visited += n_frontier
+            _write_manifest(ckpt_dir, wave, {"visited": n_visited})
+            _mark("visited")
 
             stages["wave"] = wave
             stages["total"] = round(time.monotonic() - t0, 3)
             wave_stages.append(stages)
-            if ckpt_dir is None:
-                # no checkpoint to re-read: return the live plans (ts /
-                # partition_id re-evaluate per action, as before r5)
-                lineage_parts.append(lineage)
-                metrics_parts.append(metrics)
-            visited = new_visited
-            n_visited += n_frontier
-            frontier = nxt
+            n_frontier = _rows(ckpt_dir, wave, "next_frontier")
     finally:
         # join aux writers even when a wave step raises: the caller's
         # teardown (tmp-dir cleanup, session stop) must never race an
@@ -362,34 +355,17 @@ def crawl(
     for f in aux_futures:
         f.result()
 
-    # re-read this invocation's lineage/metrics from the checkpoint parquet
-    # (recovered waves already are): the returned DataFrames are then
-    # deterministic across actions (current_timestamp/partition_id are
-    # frozen in the files) and byte-identical to the checkpointed snapshot,
-    # matching the docstring contract — and consumers don't re-execute the
-    # lineage plan the aux write already evaluated
-    for w in aux_waves:
-        lineage_parts.append(_read(spark, ckpt_dir, w, "lineage"))
-        metrics_parts.append(_read(spark, ckpt_dir, w, "metrics"))
-
-    def _union(parts: list[DataFrame]) -> DataFrame | None:
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # waves counts the CRAWL's total waves (recovered + run here), matching
-    # visited/spans/lineage which also include recovered waves; wave_sizes
-    # still lists only this invocation's waves (sizes of recovered waves
-    # live in the recovered metrics DataFrame).
+    # waves counts the CRAWL's waves (resumed + run here) and the result
+    # tables cover all of them; wave_sizes lists only this invocation's.
+    # Read from the snapshots, the tables are deterministic across actions
+    # (current_timestamp/partition_id are frozen in the files).
+    waves = start_wave + len(wave_sizes)
     return CrawlResult(
-        waves=start_wave + len(wave_sizes),
+        waves=waves,
         visited=visited,
-        spans=_union(spans_parts),
-        lineage=_union(lineage_parts) or spark.createDataFrame([], LINEAGE_SCHEMA),
-        metrics=_union(metrics_parts),
+        spans=_read_waves(spark, ckpt_dir, waves, "spans"),
+        lineage=_read_waves(spark, ckpt_dir, waves, "lineage"),
+        metrics=_read_waves(spark, ckpt_dir, waves, "metrics"),
         wave_sizes=wave_sizes,
         wave_stages=wave_stages,
     )

@@ -515,8 +515,7 @@ def extract_spans(docs_df, *, latex: bool = False):
     return docs_df.mapInArrow(make_arrow_kernel(latex=latex), schema=DOC_DDL)
 
 
-def extract_from_parquet(spark, path: str, *, latex: bool = False,
-                         num_tasks: int | None = None):
+def extract_from_parquet(spark, path: str, *, num_tasks: int | None = None):
     """Scan-fused extraction: distributes parquet ROW-GROUP splits to the
     Arrow workers, which read their split with pyarrow's C++ reader and run
     the kernel on the mmapped batches directly.
@@ -564,7 +563,7 @@ def extract_from_parquet(spark, path: str, *, latex: bool = False,
     if not splits:
         return spark.createDataFrame([], DOC_DDL)
     n_tasks = min(num_tasks or len(splits), len(splits))
-    kern = make_arrow_kernel(latex=latex)
+    kern = make_arrow_kernel()
 
     def read_and_extract(batches):
         for b in batches:

@@ -295,18 +295,6 @@ def audio_features(assets: DataFrame, *, use_fake_codec: bool = False) -> DataFr
     return assets.mapInPandas(op, schema=AUDIO_DDL)
 
 
-def resize_stub(assets: DataFrame, w: int, h: int) -> DataFrame:
-    """Plumbing-only resize: passes metadata through, marks target size.
-    Real pixel resampling needs PIL — stubbed per task instructions."""
-    return assets.withColumn(
-        "meta",
-        F.map_concat(
-            F.coalesce(F.col("meta"), F.create_map().cast("map<string,string>")),
-            F.create_map(F.lit("resize_to"), F.lit(f"{w}x{h}")),
-        ),
-    )
-
-
 def media_assets_from_spans(spans_df: DataFrame, *, fake_payloads: bool = False) -> DataFrame:
     """Lift extracted media spans into the media_assets shape. Payloads stay
     NULL (media bytes are never fetched in the extract plane — SURVEY S9);
