@@ -129,6 +129,27 @@ def test_stream_replay_two_events(spark, tmp_path, name):
     assert_matches_oracle(name, sdf, con)
 
 
+@pytest.mark.parametrize("name, tables", [
+    ("pagerank_orders", ("lineitem", "orders")),
+    ("ivf_ann_recall", ("embeddings",)),
+])
+def test_zero_row_inputs_match_oracle(spark, tmp_path, name, tables):
+    """With every table it reads cut to zero rows (schema kept), a query
+    returns the oracle's empty result: PageRank over no edges has no
+    nodes to seed a rank (1/n with n = 0), and IVF over no vectors has no
+    sample to train centroids on."""
+    import pyarrow.parquet as pq
+
+    con = duckdb.connect()
+    for t in tables:
+        path = str(tmp_path / f"{t}.parquet")
+        pq.write_table(pq.read_table(f"{SF_DIR}/{t}.parquet").slice(0, 0), path)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    sdf = entrymod.queries()[name](spark, str(tmp_path))
+    assert_matches_oracle(name, sdf, con)
+    assert sdf.count() == 0
+
+
 def test_autosearch_chain_leaves_no_cached_tables(spark):
     """The autosearch title table is materialized per call, not cached: a
     cached table would outlive the query and serve the next call."""

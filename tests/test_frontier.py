@@ -211,22 +211,15 @@ def _run_in_job_group(spark, group: str, fn):
 
 def test_resume_prologue_job_count(spark, graph_df, ckpt3, tmp_path):
     """Resuming a 3-wave checkpoint with nothing left to run reads every
-    checkpointed table with its declared schema (no schema-inference job)
-    and takes the visited count from the manifest (no count job): the Bloom
-    filter's ``merge_from`` over the visited set is all it runs."""
+    checkpointed table with its declared schema (no schema-inference job),
+    takes the visited count from the manifest (no count job) and leaves the
+    Bloom filter's build to the first wave it runs: it runs no job at all."""
     ck = _copy(ckpt3, tmp_path)
     res, prologue = _run_in_job_group(spark, "wcs-resume-prologue", lambda: crawl(
         spark, graph_df, ids([0, 1]), max_waves=3, ckpt_dir=ck, resume=True,
         use_bloom=True))
     assert res.waves == 3 and res.wave_sizes == []
-    names = [n for job in prologue for n in job]
-    assert not [n for n in names if n.startswith("parquet at")], prologue
-    assert all("bloom.py" in n for n in names), prologue  # no count job
-    # the one Bloom merge_from, however many jobs the session's adaptive
-    # execution splits it into
-    _, merge = _run_in_job_group(spark, "wcs-merge-from", lambda: NativeBloom(
-        65536).merge_from(res.visited, "doc_id"))
-    assert len(prologue) <= len(merge), (prologue, merge)
+    assert prologue == [], prologue
 
 
 def test_resumed_wave_takes_its_size_from_the_commit(spark, graph_df, ckpt3,
@@ -366,6 +359,74 @@ def test_bloom_even_stride_sets_k_distinct_bits(spark):
     assert bin(int(bf.words[0])).count("1") == bf.k
     new, maybe = bf.split(key, "doc_id")
     assert (new.count(), maybe.count()) == (0, 1)
+
+
+def test_bloom_tag_and_split_partition_the_input(spark):
+    """``tag`` keeps every input row and adds ``maybe``; every merged key
+    (a null key included) is tagged ``maybe``; ``split``'s branches are
+    the rows tagged false and true, so together they are the input,
+    duplicates included. The filter is sized for a 30% false-positive
+    rate, so both branches hold rows that were never merged."""
+    merged = [f"wiki/m_{i}" for i in range(40)] + [None]
+    others = [f"wiki/o_{i}" for i in range(200)]
+    bf = NativeBloom(40, fpr=0.3).merge_from(_ids_df(spark, merged), "doc_id")
+    rows = merged + others + merged[:5]  # duplicates stay rows
+    df = spark.createDataFrame([(d, i) for i, d in enumerate(rows)],
+                               "doc_id string, n int")
+
+    tagged = bf.tag(df, "doc_id")
+    assert tagged.columns == ["doc_id", "n", "maybe"]
+    got = {r["n"]: r["maybe"] for r in tagged.collect()}
+    assert sorted(got) == list(range(len(rows)))
+    assert all(got[i] for i, d in enumerate(rows) if d in merged)
+    fp = [i for i, d in enumerate(rows) if d not in merged and got[i]]
+    assert fp and len(fp) < len(others)
+
+    new, maybe = bf.split(df, "doc_id")
+    assert new.columns == maybe.columns == df.columns
+    new_n = [r["n"] for r in new.collect()]
+    maybe_n = [r["n"] for r in maybe.collect()]
+    assert sorted(new_n + maybe_n) == list(range(len(rows)))
+    assert sorted(maybe_n) == sorted(i for i, m in got.items() if m)
+
+
+def _next_frontier_plan(spark, monkeypatch, docs, seeds, use_bloom):
+    """The physical plan of the last wave's anti-joined candidates, as
+    ``frontier.crawl`` builds them, captured before it is executed."""
+    from wikicrawler_spark import frontier
+
+    captured = []
+
+    def capture(*args, **kwargs):
+        captured.append(anti_join(*args, **kwargs))
+        return captured[-1]
+
+    anti_join = frontier.anti_join_visited
+    monkeypatch.setattr(frontier, "anti_join_visited", capture)
+    res = crawl(spark, docs, seeds, max_waves=2, use_bloom=use_bloom,
+                num_partitions=8)
+    monkeypatch.undo()
+    assert res.waves == 2 and len(captured) == 2
+    return captured[-1]._jdf.queryExecution().executedPlan().toString()
+
+
+def test_bloom_next_frontier_plan_probes_once(spark, monkeypatch):
+    """The Bloom path's next frontier is one plan over the wave's
+    candidates: the wave's spans are scanned once, and the probe adds no
+    hash exchange to the exact path's."""
+    docs = corpus.corpus_df(spark, 400, seed=81, partitions=4)
+    seeds = [corpus.doc_id_for("basic_article", 0),
+             corpus.doc_id_for("media_interleaved", 0)]
+    plans = {b: _next_frontier_plan(spark, monkeypatch, docs, seeds, b)
+             for b in (True, False)}
+
+    shape = {b: (sum(1 for line in p.splitlines()
+                     if "FileScan" in line and "wave=00001/spans" in line),
+                 p.count("Exchange hashpartitioning"))
+             for b, p in plans.items()}
+    (bloom_scans, bloom_shuffles), (exact_scans, exact_shuffles) = shape[True], shape[False]
+    assert bloom_scans == exact_scans == 1, shape
+    assert bloom_shuffles <= exact_shuffles, shape
 
 
 def test_hot_skew_fanout(spark):

@@ -51,3 +51,11 @@ def test_pagerank_all_dangling_is_uniform(spark):
     got = {r["node"]: r["rank"] for r in pagerank(df, iterations=8).collect()}
     assert got["z"] == max(got.values())
     assert abs(sum(got.values()) - 1.0) < 1e-5
+
+
+def test_pagerank_no_edges_is_empty(spark):
+    df = spark.createDataFrame([], "src string, dst string")
+    out = pagerank(df, iterations=6)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == \
+        [("node", "string"), ("rank", "double")]
+    assert out.count() == 0

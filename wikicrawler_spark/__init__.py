@@ -15,7 +15,7 @@ Layout (mirrors SURVEY.md §7):
   html_tokenizer.py streaming regex HTML tokenizer used by the kernel
   kernel.py        the vectorized extraction kernel (mapInArrow)
   extract_job.py   scan -> anti-join visited -> salted repartition -> kernel
-  bloom.py         NativeBloom: JVM-built, codegen-probed Bloom pre-filter
+  bloom.py         NativeBloom: JVM-built, codegen-probed Bloom filter
   frontier.py      iterative frontier BFS with checkpoint/resume
   analytics.py     word-freq / LLR collocations / argmax / slicing (native)
   similarity.py    jaro-winkler most-similar (vectorized pandas UDF)

@@ -2,11 +2,12 @@
 
 Role (SURVEY.md T9 / §4.2): the reference dedups fetches with a per-URL
 SQLite probe (/root/reference/src/wikicrawler/core/grabber.py:169). At
-frontier scale that becomes a Bloom filter used as a CHEAP PRE-FILTER that
-prunes most already-visited doc_ids before the shuffle, with the exact
-``left_anti`` join remaining the authority — Bloom false positives would
+frontier scale that becomes a Bloom filter over the visited set. ``tag``
+marks each candidate ``maybe`` (possibly visited) or not (definitely new),
+and the exact ``left_anti`` join stays the authority: it drops only rows
+tagged ``maybe`` that match a visited doc_id. Bloom false positives would
 otherwise DROP docs, so the filter is only ever used in the
-"definitely-not-visited fast path" direction.
+"definitely-not-visited" direction.
 
 Hashing is xxhash64 (stable across processes/seeds — Python's builtin
 ``hash`` is salted per process and must never be used for data-plane
@@ -15,8 +16,8 @@ Mitzenmacher 2006, public result).
 
 Scale note: bits are sized from the expected visited count at ~1% FPR and
 capped so the broadcast bitmap row stays bounded; past the cap the FPR
-simply degrades (pre-filter prunes less; the exact anti-join still
-guarantees correctness). A production variant would shard the filter by
+simply degrades (more candidates are tagged ``maybe``; the exact anti-join
+still guarantees correctness). A production variant would shard the filter by
 doc_id bucket and broadcast per-bucket.
 """
 
@@ -41,8 +42,10 @@ class NativeBloom:
              n_bits/64 rows) and ORs them into the bitmap. No Python in
              the data path, no per-partition full-geometry bitsets.
       probe  k unrolled codegen bit-tests over the bitmap shipped as a
-             one-row array<bigint> broadcast — whole-stage codegen, no
-             Python worker, no broadcast variable plumbing.
+             one-row array<bigint> broadcast (an Arrow-built local
+             relation) — whole-stage codegen, no Python worker, no
+             broadcast variable plumbing. ``tag`` evaluates them once
+             into a ``maybe`` column.
 
     The bitmap is capped at 16 MiB; past the cap the FPR degrades
     gracefully and the exact anti-join stays authoritative. Words are
@@ -106,24 +109,39 @@ class NativeBloom:
                 f" cast({idx} % 64 AS int)) & 1) = 1")
         return F.expr(" AND ".join(tests))
 
-    def split(self, df, column):
-        """(definitely_new, maybe_seen): both branches are codegen
-        filters over the scan; no Python crossing, no shuffle of the
-        probed side. maybe_seen (true positives + ~fpr false positives)
-        still needs the exact anti-join. The bitmap
-        ships as a ONE-ROW broadcast relation (cross join), not as an
-        inline array literal: ``F.lit`` over a 10^4-element list expands
-        to that many child Literal expressions (one py4j call each —
-        measured ~5 s of driver time per wave), while a single-row
-        DataFrame crosses the wire once and the broadcast exchange is
-        reused by both branches."""
+    def _bitmap_df(self, spark):
+        """The bitmap as a one-row ``__bm array<bigint>`` relation, built
+        from an Arrow table: Spark plans it as a ``LocalRelation`` shipped
+        once to the JVM. A Python row list would go through ``parallelize``
+        into a ``LogicalRDD`` (about twice the probe's wall on a 10^4-word
+        bitmap), and ``F.lit`` over the words would expand to one Literal
+        child (one py4j call) per word."""
+        import pyarrow as pa
+
+        words = pa.array(self.words.view(np.int64))
+        bm = pa.ListArray.from_arrays(pa.array([0, len(words)], pa.int32()), words)
+        return spark.createDataFrame(pa.table({"__bm": bm}))
+
+    def tag(self, df, column):
+        """``df`` plus a boolean ``maybe`` column: false means ``column``'s
+        value is definitely not in the filter, true means it may be (every
+        merged key, plus about ``fpr`` of the others). One codegen
+        projection over a cross join with the broadcast one-row bitmap; no
+        Python crossing, and the cross join keeps ``df``'s partitioning."""
         from pyspark.sql import functions as F
 
-        spark = df.sparkSession
-        row = (self.words.view(np.int64).tolist(),)
-        bm_df = spark.createDataFrame([row], "__bm array<bigint>")
-        probed = self._with_hashes(df, column).crossJoin(F.broadcast(bm_df))
-        hit = self._probe_expr()
-        drop = ["__h1", "__h2", "__bm"]
-        return (probed.filter(~hit).drop(*drop),
-                probed.filter(hit).drop(*drop))
+        probed = self._with_hashes(df, column).crossJoin(
+            F.broadcast(self._bitmap_df(df.sparkSession)))
+        return (probed.withColumn("maybe", self._probe_expr())
+                .drop("__h1", "__h2", "__bm"))
+
+    def split(self, df, column):
+        """(definitely_new, maybe_seen): the two filters over one ``tag``.
+        maybe_seen (true positives + ~fpr false positives) still needs the
+        exact anti-join. Each branch plans its own probe; a caller that
+        needs both branches of one input should probe once with ``tag``."""
+        from pyspark.sql import functions as F
+
+        tagged = self.tag(df, column)
+        return (tagged.filter(~F.col("maybe")).drop("maybe"),
+                tagged.filter(F.col("maybe")).drop("maybe"))

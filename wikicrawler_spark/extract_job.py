@@ -4,15 +4,17 @@ kernel -> spans + metrics/lineage (SURVEY.md §3.2). Each crawl wave
 
 This is the Spark re-expression of the reference's ``retrieve`` path
 (/root/reference/src/wikicrawler/core/grabber.py:159-199): cache-probe
-short-circuit becomes an exact ``left_anti`` join (optionally Bloom-pruned),
+short-circuit becomes an exact ``left_anti`` join (optionally Bloom-tagged),
 fetch+parse becomes the fused mapInArrow kernel, and the SQLite upsert
 becomes an idempotent append keyed by (doc_id, wave).
 
 Scale design:
-  * The anti-join's visited side is the big shuffle risk at 10^12 docs —
-    AQE + the Bloom pre-filter (bloom.py) prune it. The crawl probes
-    ``visited ∪ frontier``, a Union with no partitioning, so no file layout
-    of the visited snapshot saves that join its exchange.
+  * The anti-join's visited side is the big shuffle risk at 10^12 docs.
+    The Bloom filter (bloom.py) does not prune it: it tags the candidates
+    in one codegen pass, and the one exact join still reads every visited
+    doc_id. The crawl probes ``visited ∪ frontier``, a Union with no
+    partitioning, so no file layout of the visited snapshot saves that
+    join its exchange; AQE broadcasts it when it is small.
   * Salted repartition spreads docs evenly before the Python stage: AQE can
     re-split skewed JOIN partitions but not a skewed UDF stage (SURVEY §4.2),
     and upstream partitioning (e.g. by crawl wave or by source bucket) is
@@ -34,15 +36,20 @@ LINK_PREFIX = WIKI_BASE + "/wiki/"
 
 def anti_join_visited(docs: DataFrame, visited: DataFrame,
                       bloom=None, spark=None) -> DataFrame:
-    """Drop already-visited docs. A ``NativeBloom`` (if given) prunes
-    cheaply first; the exact left_anti join is the authority (false
-    positives from the Bloom would drop docs — never allowed)."""
+    """Drop already-visited docs. The exact left_anti join is the
+    authority (false positives from the Bloom would drop docs — never
+    allowed). With a ``NativeBloom``, ``docs`` is probed once
+    (``NativeBloom.tag``) and the same single join matches only rows
+    tagged ``maybe``: a row the filter rules out is kept without a match.
+    One plan over ``docs``, so an un-materialized ``docs`` is computed
+    once, and a ``docs`` already hash-partitioned by ``doc_id`` keeps
+    that partitioning through the probe."""
     if bloom is not None and spark is not None:
-        # filter-based split: the big side never shuffles; only the tiny
-        # maybe_seen branch (bloom true+false positives) pays the anti-join
-        definitely_new, maybe_seen = bloom.split(docs, "doc_id")
-        checked = maybe_seen.join(visited.select("doc_id"), "doc_id", "left_anti")
-        return definitely_new.unionByName(checked)
+        tagged = bloom.tag(docs, "doc_id")
+        seen = visited.select(F.col("doc_id").alias("__seen_id"))
+        return tagged.join(
+            seen, (F.col("doc_id") == F.col("__seen_id")) & F.col("maybe"),
+            "left_anti").drop("maybe")
     return docs.join(visited.select("doc_id"), "doc_id", "left_anti")
 
 

@@ -6,7 +6,7 @@ Re-expresses the reference's recursive traversal (autosearch chain at
 
     frontier_0 = seeds
     wave i: docs ⋈ frontier  ->  extract kernel  ->  link spans
-            -> dropDuplicates -> Bloom-pruned exact anti-join vs visited
+            -> groupBy dst -> Bloom-tagged exact anti-join vs visited ∪ frontier_i
             -> (optional deterministic per-wave cap = "bounded shuffle")
             -> frontier_{i+1};  visited ∪= frontier_i
 
@@ -31,9 +31,17 @@ Scale design notes:
     ``BROADCAST_THRESHOLD`` rows it falls back to a shuffle hash join where
     AQE handles skew splitting.
   * Hot-article fan-in (10^4 inlinks onto one "List of…" page) is defused
-    BEFORE the anti-join by dropDuplicates on dst (map-side partial
-    aggregation collapses duplicates per partition) and the kernel stage is
-    salted per wave (extract_job.salted_repartition).
+    BEFORE the anti-join by a groupBy on dst that keeps the least source as
+    the parent (map-side partial aggregation collapses duplicates per
+    partition), and the kernel stage is salted per wave
+    (extract_job.salted_repartition).
+  * The Bloom filter probes the grouped candidates once
+    (``NativeBloom.tag``) and the exact anti-join runs over the tagged rows
+    in the same plan, so the wave's spans are scanned once and the
+    candidates keep their ``doc_id`` partitioning into the join. The filter
+    is merged once per wave: the wave's frontier, or, for the first wave a
+    call runs, ``visited ∪ frontier``, so a resume builds it in that wave's
+    merge rather than in a prologue of its own.
   * The kernel stage runs at most one round of tasks: no more tasks than
     ``num_partitions``, the session's cores, or one per 4 frontier docs.
     Every Python task pays a fixed start cost, so a second round on the
@@ -100,7 +108,10 @@ class CrawlResult:
     metrics: DataFrame
     wave_sizes: list = field(default_factory=list)
     #: per-wave stage walls (seconds), one dict per wave run here:
-    #: spans(kernel+write) / bloom / aux_submit (a near-zero wall: the
+    #: spans(kernel+write) / bloom (``merge_from`` of the wave's frontier;
+    #: of ``visited ∪ frontier`` in the first wave of a call, which on a
+    #: resume builds the filter from the checkpointed visited set) /
+    #: aux_submit (a near-zero wall: the
     #: lineage+metrics writes run on the aux pool and are joined before
     #: crawl() returns) / frontier(links+anti-join+write) / visited(write)
     #: — the crawl's own cost breakdown, so checkpoint tax vs compute is
@@ -225,16 +236,12 @@ def crawl(
     # front (merge requires identical bit geometry); each wave ORs in a
     # distributed build over ONLY the new frontier — O(|frontier|) per wave
     # instead of re-scanning the whole visited set (which grows without
-    # bound). Sized from the resumed visited count + a headroom factor; if
-    # the crawl outgrows it the FPR degrades gracefully (the exact
-    # anti-join stays authoritative).
-    bloom = None
-    if use_bloom:
-        # JVM bit_or word aggregation build, codegen probe; the geometry
-        # is fixed here so each wave ORs in only the new frontier
-        bloom = NativeBloom(max((n_visited + len(seeds)) * 8, 65536))
-        if n_visited:
-            bloom.merge_from(visited, "doc_id")
+    # bound). The first wave run here merges visited ∪ frontier instead,
+    # so a resume fills the filter in that one merge and a resume with no
+    # wave left runs no job. Sized from the resumed visited count + a
+    # headroom factor; if the crawl outgrows it the FPR degrades
+    # gracefully (the exact anti-join stays authoritative).
+    bloom = NativeBloom(max((n_visited + len(seeds)) * 8, 65536)) if use_bloom else None
 
     # aux writer pool: lineage/metrics writes run as concurrent Spark
     # jobs (scheduler-safe); drained in the finally below so a wave-loop
@@ -290,9 +297,10 @@ def crawl(
             visited_now = visited.select("doc_id").unionByName(frontier.select("doc_id"))
 
             if bloom is not None:
-                # OR in just this wave's frontier ids (distributed JVM
-                # word aggregation; driver receives only the set words)
-                bloom.merge_from(frontier, "doc_id")
+                # distributed JVM word aggregation; the driver receives
+                # only the set words
+                bloom.merge_from(visited_now if wave == start_wave else frontier,
+                                 "doc_id")
             _mark("bloom")
             nxt = anti_join_visited(candidates, visited_now, bloom=bloom, spark=spark)
             if per_wave_limit is not None:

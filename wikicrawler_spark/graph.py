@@ -33,7 +33,8 @@ def pagerank(edges: DataFrame, *, iterations: int = 6, damping: float = 0.85,
     """Standard PageRank with uniform teleport and dangling-mass
     redistribution. ``edges`` is a directed (src, dst) DataFrame (dedupe
     parallel edges upstream if each should count once). Returns
-    (node, rank) with rank rounded to 6."""
+    (node, rank) with rank rounded to 6; an edge set with no rows has no
+    nodes and gives an empty (node, rank)."""
     src = F.col(src_col)
     dst = F.col(dst_col)
     # every iteration re-reads edges/nodes/deg: materialize them ONCE
@@ -51,6 +52,8 @@ def pagerank(edges: DataFrame, *, iterations: int = 6, damping: float = 0.85,
     deg = (e.groupBy("src").agg(F.count("*").cast("double").alias("outdeg"))
            .localCheckpoint(eager=True))
     n = nodes.count()
+    if n == 0:
+        return nodes.select("node", F.lit(0.0).alias("rank"))
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for i in range(iterations):
         # dangling mass: total rank sitting on nodes with no out-edges —

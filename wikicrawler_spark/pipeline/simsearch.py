@@ -94,12 +94,13 @@ def train_ivf_centroids(df: DataFrame, *, n_centroids: int = 16,
     + limit compiles to TakeOrderedAndProject (per-partition top-k + merge,
     no full shuffle), so the training set is stable across partitionings
     and bounded on the driver. Returns an L2-normalized (n_centroids, dim)
-    codebook; cosine assignment = argmax dot with normalized centroids."""
-    sample = np.stack([
-        np.asarray(r[0], dtype=np.float64)
-        for r in df.select(id_col, vec_col).orderBy(id_col)
-        .limit(sample_cap).select(vec_col).collect()
-    ])
+    codebook; cosine assignment = argmax dot with normalized centroids.
+    A ``df`` with no rows gives an empty (0, 0) codebook."""
+    rows = (df.select(id_col, vec_col).orderBy(id_col)
+            .limit(sample_cap).select(vec_col).collect())
+    if not rows:
+        return np.zeros((0, 0))
+    sample = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     sample = sample / np.maximum(np.linalg.norm(sample, axis=1, keepdims=True),
                                  1e-12)
     rng = np.random.RandomState(seed)
@@ -141,10 +142,14 @@ def ivf_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     each; queries probe their ``nprobe`` nearest lists; exact cosine
     re-rank on the probed candidates. The centroid equi-join bounds
     candidates to the probed lists' occupancy — never a cross product.
-    Returns (query_id, neighbor_id, cos_sim, rank)."""
+    Returns (query_id, neighbor_id, cos_sim, rank). An empty corpus has no
+    lists to probe and no neighbours: the result is empty, with the same
+    columns and types (the exact ``cosine_topk`` over that empty corpus)."""
     cents = train_ivf_centroids(corpus, n_centroids=n_centroids,
                                 id_col=id_col, vec_col=vec_col,
                                 iterations=iterations, seed=seed)
+    if not len(cents):
+        return cosine_topk(corpus, queries, k=k, id_col=id_col, vec_col=vec_col)
     c_assign = _ivf_assign_udf(cents, top=1)
     q_assign = _ivf_assign_udf(cents, top=nprobe)
     # explode_OUTER + null filter: a plain explode's inferred
