@@ -14,6 +14,7 @@ import glob
 import json
 import os
 import shutil
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -23,6 +24,16 @@ from wikicrawler_spark.bloom import NativeBloom
 from wikicrawler_spark.extract_job import links_of
 from wikicrawler_spark.frontier import CKPT_SCHEMAS, MANIFEST, crawl
 from wikicrawler_spark.kernel import extract_spans
+from wikicrawler_spark.schemas import (
+    LINEAGE_SCHEMA,
+    METRICS_SCHEMA,
+    SPANS_OUT_SCHEMA,
+    VISITED_SCHEMA,
+)
+
+#: declared schema of each table a crawl result holds
+RESULT_SCHEMAS = {"visited": VISITED_SCHEMA, "spans": SPANS_OUT_SCHEMA,
+                  "lineage": LINEAGE_SCHEMA, "metrics": METRICS_SCHEMA}
 
 
 def expected_closure(seeds):
@@ -93,13 +104,33 @@ def test_bloom_path_equals_exact_path(crawl_bloom, crawl_exact):
     assert a == b
 
 
+def _names_and_types(schema):
+    return [(f.name, f.dataType.simpleString()) for f in schema]
+
+
 def test_metrics_and_lineage_populated(crawl_exact):
-    m = crawl_exact.metrics.collect()
-    assert sum(r["docs_in"] for r in m) > 0
-    assert all(r["spans_out"] >= r["docs_in"] for r in m)
-    parents = {r["doc_id"]: r["parent_doc_id"] for r in crawl_exact.lineage.collect()}
+    """Metrics count what the waves committed, lineage names one wave and
+    parent per visited doc, and both have their declared columns."""
+    res = crawl_exact
+    visited = {(r["doc_id"], r["wave"]) for r in res.visited.collect()}
+    m = res.metrics.collect()
+    docs_in = Counter()
+    for r in m:
+        docs_in[r["wave"]] += r["docs_in"]
+    assert docs_in == Counter(w for _, w in visited)
+    assert all(r["spans_out"] >= r["docs_in"] and r["wall_ms"] >= 0 for r in m)
+    assert sum(r["links_out"] for r in m) == links_of(res.spans).count()
+
+    lineage = res.lineage.collect()
+    assert {(r["doc_id"], r["wave"]) for r in lineage} == visited
+    assert len(lineage) == len(visited)
+    parents = {r["doc_id"]: r["parent_doc_id"] for r in lineage}
     assert parents[corpus.doc_id_for("link_graph", 0)] is None
     assert any(p is not None for p in parents.values())
+    assert all(r["partition_id"] is not None and r["ts"] is not None for r in lineage)
+
+    assert _names_and_types(res.lineage.schema) == _names_and_types(LINEAGE_SCHEMA)
+    assert _names_and_types(res.metrics.schema) == _names_and_types(METRICS_SCHEMA)
 
 
 def test_per_wave_limit_bounded_and_deterministic(spark, graph_df):
@@ -146,13 +177,11 @@ def _copy(ckpt: str, tmp_path) -> str:
 
 #: what wave 2 has not yet committed when the crawl is killed at its start
 #: or right after each of its stages (stage names as in
-#: ``CrawlResult.wave_stages``); the bloom stage writes nothing, and the
-#: lineage/metrics writes submitted at aux_submit may finish before the kill
+#: ``CrawlResult.wave_stages``); the bloom stage writes nothing
 KILLED_AFTER = {
-    "start": ("spans", "lineage", "metrics", "next_frontier", "visited", MANIFEST),
-    "spans": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
-    "bloom": ("lineage", "metrics", "next_frontier", "visited", MANIFEST),
-    "aux_submit": ("next_frontier", "visited", MANIFEST),
+    "start": ("spans", "next_frontier", "visited", MANIFEST),
+    "spans": ("next_frontier", "visited", MANIFEST),
+    "bloom": ("next_frontier", "visited", MANIFEST),
     "frontier": ("visited", MANIFEST),
     "visited": (MANIFEST,),
 }
@@ -191,6 +220,62 @@ def test_kill_and_resume_at_stage_boundary(spark, graph_df, ckpt3, tmp_path,
     assert set(span_docs) == {d for d, _ in want}
     lineage_docs = sorted(r["doc_id"] for r in resumed.lineage.collect())
     assert lineage_docs == sorted(d for d, _ in want)
+
+
+def test_kill_after_commit_keeps_lineage_and_metrics(spark, graph_df, ckpt3,
+                                                      tmp_path, crawl_exact):
+    """A crawl killed right after a wave's commit, resumed to the end, has
+    lineage for every visited doc exactly once and metrics for every wave:
+    both are read from the three tables a committed wave holds beside its
+    manifest. Tables of their own, written after the commit, are deleted
+    here where they exist, as such a kill could leave them missing."""
+    ck = _copy(ckpt3, tmp_path)
+    wave2 = os.path.join(ck, "wave=00002")
+    assert sorted(os.listdir(wave2)) == sorted([*CKPT_SCHEMAS, MANIFEST])
+    for name in ("lineage", "metrics"):
+        shutil.rmtree(os.path.join(wave2, name), ignore_errors=True)
+
+    resumed = crawl(spark, graph_df, ids([0, 1]), max_waves=30, ckpt_dir=ck,
+                    resume=True, use_bloom=False)
+
+    assert resumed.wave_stages[0]["wave"] == 3
+    want = {(r["doc_id"], r["wave"]) for r in crawl_exact.visited.collect()}
+    lineage = [(r["doc_id"], r["wave"]) for r in resumed.lineage.collect()]
+    assert len(lineage) == len(want) and set(lineage) == want
+    assert {r["wave"] for r in resumed.metrics.collect()} == set(range(resumed.waves))
+
+
+def _session_jobs(spark) -> set:
+    """Ids of every job the session has started, in any thread or job
+    group, from its status store."""
+    sc = spark.sparkContext
+    # the status store is fed asynchronously by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    it = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    jobs = set()
+    while it.hasNext():
+        jobs.add(it.next().jobId())
+    return jobs
+
+
+#: Spark jobs of a resumed one-wave Bloom call: the spans, next_frontier
+#: and visited writes with their adaptive query stages, and the Bloom
+#: filter's merge (12 while lineage and metrics were written per wave)
+RESUMED_BLOOM_WAVE_JOBS = 9
+
+
+def test_resumed_bloom_wave_job_count(spark, graph_df, ckpt3, tmp_path):
+    """A resumed one-wave Bloom call starts a pinned number of Spark jobs,
+    counted over the whole session rather than the caller's job group:
+    a job that a wave adds, on any thread, fails this test. The result's
+    lineage and metrics are read when asked for, by no job of the call."""
+    ck = _copy(ckpt3, tmp_path)
+    before = _session_jobs(spark)
+    res = crawl(spark, graph_df, ids([0, 1]), max_waves=4, ckpt_dir=ck,
+                resume=True, use_bloom=True)
+    jobs = _session_jobs(spark) - before
+    assert res.waves == 4 and len(res.wave_sizes) == 1
+    assert len(jobs) == RESUMED_BLOOM_WAVE_JOBS, sorted(jobs)
 
 
 def _run_in_job_group(spark, group: str, fn):
@@ -268,9 +353,9 @@ def test_degenerate_seeds(spark, graph_df, tmp_path, seeds, same_as):
                 ckpt_dir=str(tmp_path / "a"), use_bloom=False)
     if same_as is None:
         assert (res.waves, res.wave_sizes) == (0, [])
-        for name in ("visited", "spans", "lineage", "metrics"):
+        for name, schema in RESULT_SCHEMAS.items():
             df = getattr(res, name)
-            assert df.schema == CKPT_SCHEMAS[name], name
+            assert df.schema == schema, name
             assert df.count() == 0, name
         return
     want = crawl(spark, graph_df, ids(same_as), max_waves=2,
@@ -284,12 +369,11 @@ def test_degenerate_seeds(spark, graph_df, tmp_path, seeds, same_as):
 def test_checkpoint_schema_matches_declared(spark, ckpt3, name):
     """Checkpoint reads declare their schema, and a column renamed or
     retyped on the write side would read back as NULL without an error:
-    what each table holds on disk must equal its declared schema by field
-    name and data type."""
+    what each table a wave writes holds on disk must equal its declared
+    schema by field name and data type."""
     path = os.path.join(ckpt3, "wave=00002", name)
-    on_disk = spark.read.parquet(path).schema
-    assert [(f.name, f.dataType.simpleString()) for f in on_disk] == \
-        [(f.name, f.dataType.simpleString()) for f in CKPT_SCHEMAS[name]]
+    assert _names_and_types(spark.read.parquet(path).schema) == \
+        _names_and_types(CKPT_SCHEMAS[name])
 
 
 def test_links_of_extraction(spark, graph_df):

@@ -1,6 +1,7 @@
 """The extract job: scan -> anti-join visited -> salted repartition ->
-kernel -> spans + metrics/lineage (SURVEY.md §3.2). Each crawl wave
-(``frontier.crawl``) composes these pieces with ``kernel.extract_spans``.
+kernel -> spans, plus metrics over the committed spans (SURVEY.md §3.2).
+Each crawl wave (``frontier.crawl``) composes these pieces with
+``kernel.extract_spans``.
 
 This is the Spark re-expression of the reference's ``retrieve`` path
 (/root/reference/src/wikicrawler/core/grabber.py:159-199): cache-probe
@@ -20,9 +21,9 @@ Scale design:
     and upstream partitioning (e.g. by crawl wave or by source bucket) is
     routinely skewed. Hashing doc_id with a wave salt gives uniform task
     sizes; Arrow batch caps bound per-batch memory for giant docs.
-  * Metrics come from the DATA PATH (native aggregation over
-    spark_partition_id()), not accumulators — accumulators are not
-    exactly-once under task retries (SURVEY §4.2 item 4).
+  * Metrics come from the DATA PATH (native aggregation over the part
+    files the kernel tasks committed), not accumulators — accumulators are
+    not exactly-once under task retries (SURVEY §4.2 item 4).
 """
 
 from __future__ import annotations
@@ -76,14 +77,16 @@ def links_of(spans_df: DataFrame) -> DataFrame:
     )
 
 
-def partition_metrics(spans_df: DataFrame, wave: int, wall_ms: int) -> DataFrame:
-    """Per-partition exactly-once metrics from the data path
-    (FIXTURES.md metrics schema). wall_ms is the wave's driver-measured
-    wall clock (per-partition timing would need a kernel side-channel;
-    counts are the scaling-relevant signal)."""
+def partition_metrics(spans_df: DataFrame, wall_ms: dict[int, int]) -> DataFrame:
+    """Per-task exactly-once metrics from the data path (FIXTURES.md
+    metrics schema): one row per ``(wave, partition_id)`` of ``spans_df``,
+    whose rows carry the wave and the kernel task that committed them.
+    ``wall_ms`` maps each wave to its wall clock, timed around its jobs
+    (per-task timing would need a kernel side-channel; counts are the
+    scaling-relevant signal)."""
+    wall = F.create_map(*(F.lit(v) for kv in sorted(wall_ms.items()) for v in kv))
     return (
-        spans_df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
+        spans_df.groupBy("wave", "partition_id")
         .agg(
             F.count("*").alias("docs_in"),
             F.sum(F.size("spans")).cast("long").alias("spans_out"),
@@ -92,10 +95,7 @@ def partition_metrics(spans_df: DataFrame, wave: int, wall_ms: int) -> DataFrame
             ).cast("long").alias("links_out"),
         )
         .select(
-            F.lit(wave).cast("int").alias("wave"),
-            F.col("partition_id").cast("int"),
-            "docs_in", "spans_out", "links_out",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
+            "wave", "partition_id", "docs_in", "spans_out", "links_out",
+            wall[F.col("wave")].cast("long").alias("wall_ms"),
         )
     )
-

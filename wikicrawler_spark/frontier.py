@@ -13,17 +13,25 @@ Re-expresses the reference's recursive traversal (autosearch chain at
 Each wave is one batch job; control crosses driver<->cluster once per wave.
 Every wave commits a snapshot: one ``wave=NNNNN`` directory per wave under
 ``ckpt_dir`` (a staging dir removed at interpreter exit when none is given),
-emulating Iceberg's atomic snapshot commit (SURVEY §4.2 item 5). A wave's
-snapshot commits when its ``next_frontier`` and ``visited`` tables both hold
-``_SUCCESS`` and its ``_manifest.json`` (the visited count) is in place,
-written last with an atomic rename. Resume reads the last committed wave and
-continues; a wave without a manifest re-runs. Every checkpoint read declares
-its schema from ``schemas.py``, so a read starts no schema-inference job,
-and no job counts rows: the visited count comes from the manifest, the next
-wave's size from the ``next_frontier`` parquet footers. ``visited`` is a
-plain parquet snapshot like every other table, and the crawl registers
-nothing in the session catalog. The returned spans, lineage and metrics are
-read once, at the end, from the snapshot set of the committed waves.
+emulating Iceberg's atomic snapshot commit (SURVEY §4.2 item 5). A wave
+writes three tables, ``spans``, ``next_frontier`` and ``visited``, and
+commits when the last two hold ``_SUCCESS`` and its ``_manifest.json`` (the
+visited count and the wave's wall) is in place, written last with an
+atomic rename. Resume reads the last committed wave and continues; a wave
+without a manifest re-runs. Every checkpoint read declares its schema from
+``schemas.py``, so a read starts no schema-inference job, and no job
+counts rows: the visited count comes from the manifest, the next wave's
+size from the ``next_frontier`` parquet footers. ``visited`` is a plain
+parquet snapshot like every other table, and the crawl registers nothing
+in the session catalog.
+
+The result's spans are the committed waves' ``spans`` read as one scan.
+Lineage and metrics are not written at all: like Iceberg's metadata
+tables, they are queries over the snapshot set the commits already made
+durable, read when the result is asked for them, so a crawl killed after
+any commit loses neither. Each row keeps where it was committed, from the
+scan's ``_metadata`` column: the wave directory, the part file (the task
+that wrote it) and that file's modification time.
 
 Scale design notes:
   * The frontier is usually tiny relative to the corpus -> broadcast-join it
@@ -61,7 +69,6 @@ import json
 import math
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
@@ -86,17 +93,18 @@ from .schemas import (
 #: docs scan; a larger frontier takes a shuffle join
 BROADCAST_THRESHOLD = 1_000_000
 
-#: declared schema of each table a wave checkpoints
+#: declared schema of each table a wave writes, in write order
 CKPT_SCHEMAS = {
+    "spans": SPANS_OUT_SCHEMA,
     "next_frontier": FRONTIER_SCHEMA,
     "visited": VISITED_SCHEMA,
-    "spans": SPANS_OUT_SCHEMA,
-    "lineage": LINEAGE_SCHEMA,
-    "metrics": METRICS_SCHEMA,
 }
 
 #: per-wave manifest, written last: its presence commits the wave
 MANIFEST = "_manifest.json"
+
+#: a committed part file's path: its wave and its part index
+_PART_FILE = r"wave=(\d+)/[^/]+/part-(\d+)[^/]*$"
 
 
 @dataclass
@@ -104,19 +112,50 @@ class CrawlResult:
     waves: int
     visited: DataFrame
     spans: DataFrame
-    lineage: DataFrame
-    metrics: DataFrame
+    #: the snapshot set of the crawl: ``lineage`` and ``metrics`` are
+    #: read from its committed waves
+    ckpt_dir: str
     wave_sizes: list = field(default_factory=list)
     #: per-wave stage walls (seconds), one dict per wave run here:
     #: spans(kernel+write) / bloom (``merge_from`` of the wave's frontier;
     #: of ``visited ∪ frontier`` in the first wave of a call, which on a
     #: resume builds the filter from the checkpointed visited set) /
-    #: aux_submit (a near-zero wall: the
-    #: lineage+metrics writes run on the aux pool and are joined before
-    #: crawl() returns) / frontier(links+anti-join+write) / visited(write)
-    #: — the crawl's own cost breakdown, so checkpoint tax vs compute is
+    #: frontier(links+anti-join+write) / visited(write+commit) — the
+    #: crawl's own cost breakdown, so checkpoint tax vs compute is
     #: measurable per run
     wave_stages: list = field(default_factory=list)
+
+    @property
+    def lineage(self) -> DataFrame:
+        """One row per visited doc, from the frontier that brought it in:
+        wave 0's seeds, committed by wave 0's ``visited``, and wave w's
+        docs, committed by wave w-1's ``next_frontier`` with their parents.
+        ``partition_id`` is the index of the part file that committed the
+        row and ``ts`` that file's modification time."""
+        spark = self.visited.sparkSession
+        if not self.waves:
+            return spark.createDataFrame([], LINEAGE_SCHEMA)
+        seeds = _read_committed(spark, self.ckpt_dir, [0], "visited").select(
+            "wave", "doc_id", F.lit(None).cast("string").alias("parent_doc_id"),
+            "partition_id", "ts")
+        found = _read_committed(spark, self.ckpt_dir, range(self.waves - 1),
+                                "next_frontier").select(
+            (F.col("snapshot") + 1).alias("wave"), "doc_id", "parent_doc_id",
+            "partition_id", "ts")
+        return seeds.unionByName(found)
+
+    @property
+    def metrics(self) -> DataFrame:
+        """One row per kernel task of each committed wave: the counts of
+        the part file it wrote to the wave's ``spans``, and the wave's wall
+        from its manifest."""
+        spark = self.visited.sparkSession
+        if not self.waves:
+            return spark.createDataFrame([], METRICS_SCHEMA)
+        wall_ms = {w: _read_manifest(self.ckpt_dir, w)["wall_ms"]
+                   for w in range(self.waves)}
+        spans = _read_committed(spark, self.ckpt_dir, range(self.waves), "spans")
+        return partition_metrics(spans.withColumnRenamed("snapshot", "wave"), wall_ms)
 
 
 def _wave_dir(ckpt_dir: str, wave: int, name: str) -> str:
@@ -127,10 +166,27 @@ def _is_complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _read(spark, ckpt_dir: str, wave: int, name: str) -> DataFrame:
-    """One checkpointed table, read with its declared schema (a parquet
-    read without one runs a schema-inference job)."""
-    return spark.read.schema(CKPT_SCHEMAS[name]).parquet(_wave_dir(ckpt_dir, wave, name))
+def _read_waves(spark, ckpt_dir: str, waves, name: str) -> DataFrame:
+    """Table ``name`` of ``waves`` as one scan, read with its declared
+    schema (a parquet read without one runs a schema-inference job). A
+    committed wave wrote every table before its manifest, so a missing
+    one raises."""
+    return spark.read.schema(CKPT_SCHEMAS[name]).parquet(
+        *(_wave_dir(ckpt_dir, w, name) for w in waves))
+
+
+def _read_committed(spark, ckpt_dir: str, waves, name: str) -> DataFrame:
+    """``_read_waves`` with each row tagged by where it was committed, from
+    the scan's ``_metadata``: ``snapshot`` (its wave), ``partition_id``
+    (the index of its part file, i.e. the task that wrote it) and ``ts``
+    (that file's modification time)."""
+    path = F.col("_metadata.file_path")
+    return _read_waves(spark, ckpt_dir, waves, name).select(
+        "*",
+        F.regexp_extract(path, _PART_FILE, 1).cast("int").alias("snapshot"),
+        F.regexp_extract(path, _PART_FILE, 2).cast("int").alias("partition_id"),
+        F.col("_metadata.file_modification_time").alias("ts"),
+    )
 
 
 def _rows(ckpt_dir: str, wave: int, name: str) -> int:
@@ -140,16 +196,6 @@ def _rows(ckpt_dir: str, wave: int, name: str) -> int:
 
     return sum(pq.read_metadata(f).num_rows
                for f in glob.glob(os.path.join(_wave_dir(ckpt_dir, wave, name), "part-*")))
-
-
-def _read_waves(spark, ckpt_dir: str, waves: int, name: str) -> DataFrame:
-    """One table of waves ``0 .. waves-1`` read as one scan. Lineage and
-    metrics are best-effort (a crawl killed after a wave's commit may not
-    have written them), so only tables holding ``_SUCCESS`` are read."""
-    paths = [p for w in range(waves) if _is_complete(p := _wave_dir(ckpt_dir, w, name))]
-    if not paths:
-        return spark.createDataFrame([], CKPT_SCHEMAS[name])
-    return spark.read.schema(CKPT_SCHEMAS[name]).parquet(*paths)
 
 
 def _write_manifest(ckpt_dir: str, wave: int, manifest: dict) -> None:
@@ -199,9 +245,9 @@ def crawl(
 
     Returns visited/spans/lineage/metrics DataFrames read back from the
     committed snapshots of waves ``0 .. waves-1``, so the logical plan does
-    not grow with wave count. Without ``ckpt_dir`` the snapshots go to a
-    staging dir (``staging.stage_dir``), and ``resume`` has nothing to
-    resume from.
+    not grow with wave count; lineage and metrics are read when asked for.
+    Without ``ckpt_dir`` the snapshots go to a staging dir
+    (``staging.stage_dir``), and ``resume`` has nothing to resume from.
 
     ``visited_buckets`` hash-partitions each wave's ``visited`` snapshot by
     ``doc_id`` into that many part files before the write. It sets the
@@ -222,9 +268,9 @@ def crawl(
     # across a resume
     n_visited = 0
     if resume and (lw := last_complete_wave(ckpt_dir)) >= 0:
-        frontier = _read(spark, ckpt_dir, lw, "next_frontier")
+        frontier = _read_waves(spark, ckpt_dir, [lw], "next_frontier")
         n_frontier = _rows(ckpt_dir, lw, "next_frontier")
-        visited = _read(spark, ckpt_dir, lw, "visited")
+        visited = _read_waves(spark, ckpt_dir, [lw], "visited")
         n_visited = _read_manifest(ckpt_dir, lw)["visited"]
         start_wave = lw + 1
     else:
@@ -243,137 +289,89 @@ def crawl(
     # gracefully (the exact anti-join stays authoritative).
     bloom = NativeBloom(max((n_visited + len(seeds)) * 8, 65536)) if use_bloom else None
 
-    # aux writer pool: lineage/metrics writes run as concurrent Spark
-    # jobs (scheduler-safe); drained in the finally below so a wave-loop
-    # exception never leaves writes racing the caller's teardown, and
-    # joined on the success path where a failed aux write re-raises
-    aux_pool = ThreadPoolExecutor(max_workers=2,
-                                  thread_name_prefix="wcs-crawl-aux")
-    aux_futures: list = []
+    for wave in range(start_wave, max_waves):
+        if n_frontier == 0:
+            break
+        wave_sizes.append(n_frontier)
+        t0 = time.monotonic()
+        stages: dict = {}
+        _t = t0
 
-    try:
-        for wave in range(start_wave, max_waves):
-            if n_frontier == 0:
-                break
-            wave_sizes.append(n_frontier)
-            t0 = time.monotonic()
-            stages: dict = {}
-            _t = t0
+        def _mark(name: str) -> None:
+            nonlocal _t
+            now = time.monotonic()
+            stages[name] = round(now - _t, 3)
+            _t = now
 
-            def _mark(name: str) -> None:
-                nonlocal _t
-                now = time.monotonic()
-                stages[name] = round(now - _t, 3)
-                _t = now
+        # unique by construction: seeds are deduped, and each next
+        # frontier is one row per grouped dst_doc_id
+        f_ids = frontier.select("doc_id")
+        join_side = F.broadcast(f_ids) if n_frontier <= BROADCAST_THRESHOLD else f_ids
+        wave_docs = docs.join(join_side, "doc_id")
+        if num_partitions:
+            # scale-adaptive task count (guide §2): a 2-doc seed wave
+            # must not fan into num_partitions near-empty kernel tasks
+            # (and as many checkpoint files); cap at ~4 docs/task and
+            # grow with the frontier up to the configured ceiling, but
+            # never past one round of tasks on the session's cores
+            n_parts = max(1, min(num_partitions,
+                                 spark.sparkContext.defaultParallelism,
+                                 math.ceil(n_frontier / 4)))
+            wave_docs = salted_repartition(wave_docs, n_parts, salt=wave)
 
-            # unique by construction: seeds are deduped, and each next
-            # frontier is one row per grouped dst_doc_id
-            f_ids = frontier.select("doc_id")
-            join_side = F.broadcast(f_ids) if n_frontier <= BROADCAST_THRESHOLD else f_ids
-            wave_docs = docs.join(join_side, "doc_id")
-            if num_partitions:
-                # scale-adaptive task count (guide §2): a 2-doc seed wave
-                # must not fan into num_partitions near-empty kernel tasks
-                # (and as many checkpoint files); cap at ~4 docs/task and
-                # grow with the frontier up to the configured ceiling, but
-                # never past one round of tasks on the session's cores
-                n_parts = max(1, min(num_partitions,
-                                     spark.sparkContext.defaultParallelism,
-                                     math.ceil(n_frontier / 4)))
-                wave_docs = salted_repartition(wave_docs, n_parts, salt=wave)
+        extract_spans(wave_docs).write.mode("overwrite").parquet(
+            _wave_dir(ckpt_dir, wave, "spans"))
+        spans = _read_waves(spark, ckpt_dir, [wave], "spans")
+        _mark("spans")
 
-            extract_spans(wave_docs).write.mode("overwrite").parquet(
-                _wave_dir(ckpt_dir, wave, "spans"))
-            spans = _read(spark, ckpt_dir, wave, "spans")
-            _mark("spans")
+        # next frontier: extracted wikilinks, deduped, minus visited ∪ current
+        links = links_of(spans)  # (src_doc_id, dst_doc_id)
+        candidates = (
+            links.groupBy("dst_doc_id")
+            .agg(F.min("src_doc_id").alias("parent_doc_id"))  # deterministic parent
+            .withColumnRenamed("dst_doc_id", "doc_id")
+        )
+        visited_now = visited.select("doc_id").unionByName(frontier.select("doc_id"))
 
-            # next frontier: extracted wikilinks, deduped, minus visited ∪ current
-            links = links_of(spans)  # (src_doc_id, dst_doc_id)
-            candidates = (
-                links.groupBy("dst_doc_id")
-                .agg(F.min("src_doc_id").alias("parent_doc_id"))  # deterministic parent
-                .withColumnRenamed("dst_doc_id", "doc_id")
-            )
-            visited_now = visited.select("doc_id").unionByName(frontier.select("doc_id"))
+        if bloom is not None:
+            # distributed JVM word aggregation; only the set words
+            # come back
+            bloom.merge_from(visited_now if wave == start_wave else frontier,
+                             "doc_id")
+        _mark("bloom")
+        nxt = anti_join_visited(candidates, visited_now, bloom=bloom, spark=spark)
+        if per_wave_limit is not None:
+            nxt = nxt.orderBy("doc_id").limit(per_wave_limit)
+        # visited ∪= this wave's frontier, planned before ``frontier`` moves on
+        new_visited = visited.unionByName(
+            frontier.select("doc_id", F.lit(wave).cast("int").alias("wave")))
 
-            if bloom is not None:
-                # distributed JVM word aggregation; the driver receives
-                # only the set words
-                bloom.merge_from(visited_now if wave == start_wave else frontier,
-                                 "doc_id")
-            _mark("bloom")
-            nxt = anti_join_visited(candidates, visited_now, bloom=bloom, spark=spark)
-            if per_wave_limit is not None:
-                nxt = nxt.orderBy("doc_id").limit(per_wave_limit)
+        nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
+        frontier = _read_waves(spark, ckpt_dir, [wave], "next_frontier")
+        _mark("frontier")
+        if visited_buckets:
+            new_visited = new_visited.repartition(visited_buckets, "doc_id")
+        new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
+        visited = _read_waves(spark, ckpt_dir, [wave], "visited")
+        n_visited += n_frontier
+        _write_manifest(ckpt_dir, wave, {
+            "visited": n_visited, "wall_ms": int((time.monotonic() - t0) * 1000)})
+        _mark("visited")
 
-            wall_ms = int((time.monotonic() - t0) * 1000)
-
-            lineage = frontier.select(
-                F.lit(wave).cast("int").alias("wave"),
-                "doc_id",
-                "parent_doc_id",
-                F.spark_partition_id().cast("int").alias("partition_id"),
-                F.current_timestamp().alias("ts"),
-            )
-            metrics = partition_metrics(spans, wave, wall_ms)
-
-            new_visited = visited.unionByName(
-                frontier.select("doc_id", F.lit(wave).cast("int").alias("wave"))
-            )
-
-            # Snapshot commit. lineage/metrics are observability metadata —
-            # NOT needed for resume (its state is the synchronous
-            # (next_frontier, visited) _SUCCESS pair plus the manifest) — and
-            # both derive from parquet already committed (frontier: previous
-            # wave; spans: above). Written inline they cost ~0.5 s of serial
-            # job overhead each per wave (measured r5, BENCH/BASELINE.md
-            # crawl breakdown), so they write on the aux pool; futures join
-            # before the crawl returns, failures re-raise there.
-            for name, df in (("lineage", lineage), ("metrics", metrics)):
-                aux_futures.append(aux_pool.submit(
-                    lambda d=df, p=_wave_dir(ckpt_dir, wave, name):
-                    d.write.mode("overwrite").parquet(p)))
-            _mark("aux_submit")
-            nxt.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "next_frontier"))
-            frontier = _read(spark, ckpt_dir, wave, "next_frontier")
-            _mark("frontier")
-            if visited_buckets:
-                new_visited = new_visited.repartition(visited_buckets, "doc_id")
-            new_visited.write.mode("overwrite").parquet(_wave_dir(ckpt_dir, wave, "visited"))
-            visited = _read(spark, ckpt_dir, wave, "visited")
-            n_visited += n_frontier
-            _write_manifest(ckpt_dir, wave, {"visited": n_visited})
-            _mark("visited")
-
-            stages["wave"] = wave
-            stages["total"] = round(time.monotonic() - t0, 3)
-            wave_stages.append(stages)
-            n_frontier = _rows(ckpt_dir, wave, "next_frontier")
-    finally:
-        # join aux writers even when a wave step raises: the caller's
-        # teardown (tmp-dir cleanup, session stop) must never race an
-        # in-flight lineage/metrics write, and the pool's threads must
-        # not leak. On the exception path a failed aux write stays
-        # secondary (the primary error propagates); on the success path
-        # the f.result() loop below re-raises it.
-        aux_pool.shutdown(wait=True)
-
-    # all lineage/metrics snapshots are durable before the crawl
-    # returns; a failed aux write re-raises here
-    for f in aux_futures:
-        f.result()
+        stages["wave"] = wave
+        stages["total"] = round(time.monotonic() - t0, 3)
+        wave_stages.append(stages)
+        n_frontier = _rows(ckpt_dir, wave, "next_frontier")
 
     # waves counts the CRAWL's waves (resumed + run here) and the result
-    # tables cover all of them; wave_sizes lists only this invocation's.
-    # Read from the snapshots, the tables are deterministic across actions
-    # (current_timestamp/partition_id are frozen in the files).
+    # tables cover all of them; wave_sizes lists only this invocation's
     waves = start_wave + len(wave_sizes)
     return CrawlResult(
         waves=waves,
         visited=visited,
-        spans=_read_waves(spark, ckpt_dir, waves, "spans"),
-        lineage=_read_waves(spark, ckpt_dir, waves, "lineage"),
-        metrics=_read_waves(spark, ckpt_dir, waves, "metrics"),
+        spans=(_read_waves(spark, ckpt_dir, range(waves), "spans") if waves
+               else spark.createDataFrame([], SPANS_OUT_SCHEMA)),
+        ckpt_dir=ckpt_dir,
         wave_sizes=wave_sizes,
         wave_stages=wave_stages,
     )
