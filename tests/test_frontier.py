@@ -22,7 +22,7 @@ import pytest
 from wikicrawler_spark import corpus
 from wikicrawler_spark.bloom import NativeBloom
 from wikicrawler_spark.extract_job import links_of
-from wikicrawler_spark.frontier import CKPT_SCHEMAS, MANIFEST, crawl
+from wikicrawler_spark.frontier import CKPT_SCHEMAS, MANIFEST, CrawlResult, crawl
 from wikicrawler_spark.kernel import extract_spans
 from wikicrawler_spark.schemas import (
     LINEAGE_SCHEMA,
@@ -365,15 +365,25 @@ def test_degenerate_seeds(spark, graph_df, tmp_path, seeds, same_as):
         _visited_facts(want, str(tmp_path / "b"))
 
 
-@pytest.mark.parametrize("name", list(CKPT_SCHEMAS))
+@pytest.mark.parametrize("name", [*CKPT_SCHEMAS, "lineage", "metrics"])
 def test_checkpoint_schema_matches_declared(spark, ckpt3, name):
     """Checkpoint reads declare their schema, and a column renamed or
     retyped on the write side would read back as NULL without an error:
-    what each table a wave writes holds on disk must equal its declared
-    schema by field name and data type."""
-    path = os.path.join(ckpt3, "wave=00002", name)
-    assert _names_and_types(spark.read.parquet(path).schema) == \
-        _names_and_types(CKPT_SCHEMAS[name])
+    what each table a wave writes holds on disk, and what lineage and
+    metrics read from those tables, must equal its declared schema by
+    field name and data type."""
+    if name in CKPT_SCHEMAS:
+        path = os.path.join(ckpt3, "wave=00002", name)
+        assert _names_and_types(spark.read.parquet(path).schema) == \
+            _names_and_types(CKPT_SCHEMAS[name])
+        return
+    # lineage and metrics are read from the committed waves of ckpt_dir
+    res = CrawlResult(waves=3, visited=spark.createDataFrame([], VISITED_SCHEMA),
+                      spans=spark.createDataFrame([], SPANS_OUT_SCHEMA),
+                      ckpt_dir=ckpt3)
+    df = getattr(res, name)
+    assert _names_and_types(df.schema) == _names_and_types(RESULT_SCHEMAS[name])
+    assert df.count() > 0
 
 
 def test_links_of_extraction(spark, graph_df):
