@@ -24,4 +24,45 @@ Layout (mirrors SURVEY.md §7):
   pipeline/        training-data ops: dedup, simsearch, text quality, multimodal
 """
 
+import os
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def _keep_spark_archives() -> None:
+    """Stop ``importlib.invalidate_caches()`` re-reading Spark's own archives.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``pyspark.worker_util.setup_spark_files``). On CPython 3.11 that
+    makes every cached ``zipimporter`` re-parse its archive's directory,
+    one importer per imported package path: about 28k entries of
+    ``pyspark.zip``, the py4j zip and the spark-core jar, some 150 ms a
+    task. Those archives sit under ``$SPARK_HOME/python`` and
+    ``$SPARK_HOME/jars`` (as given and resolved) and do not change during
+    a run, so their importers keep the directory they read. Every other
+    archive (``--py-files``, ``addPyFile``, the SparkFiles directory,
+    which a standalone worker keeps under ``$SPARK_HOME/work``) and every
+    directory finder is invalidated as before.
+
+    Every worker that unpickles a package function imports this module
+    first, so the narrowing is in place from a worker's second task on.
+    It wraps the method once per process; a forked worker inherits it.
+    """
+    stock = zipimport.zipimporter.invalidate_caches
+    if getattr(stock, "keeps_spark_archives", False):
+        return
+    home = os.environ.get("SPARK_HOME")
+    kept = tuple(os.path.join(root, sub, "")
+                 for root in ({home, os.path.realpath(home)} if home else ())
+                 for sub in ("python", "jars"))
+
+    def invalidate_caches(self):
+        if not self.archive.startswith(kept):
+            stock(self)
+
+    invalidate_caches.keeps_spark_archives = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_keep_spark_archives()

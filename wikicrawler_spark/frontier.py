@@ -52,8 +52,11 @@ Scale design notes:
     merge rather than in a prologue of its own.
   * The kernel stage runs at most one round of tasks: no more tasks than
     ``num_partitions``, the session's cores, or one per 4 frontier docs.
-    Every Python task pays a fixed start cost, so a second round on the
-    same cores buys nothing for a small frontier.
+    Each task still pays a fixed cost: its launch, the kernel closure's
+    unpickle, the Arrow stream setup and one ``spans`` part file (a fresh
+    worker's first task also re-reads Spark's archives, see the package
+    ``__init__``). The per-task archive re-read is gone, so the cap's
+    gain has not been re-measured since.
   * The wave anti-joins its candidates against ``visited ∪ frontier``; the
     Union carries no partitioning, so that join broadcasts or shuffles
     both sides whatever the layout of the visited files.
