@@ -1,10 +1,11 @@
 """The package's narrowing of ``importlib.invalidate_caches`` on Python workers.
 
 pyspark calls ``importlib.invalidate_caches()`` before every task; importing
-``wikicrawler_spark`` makes that skip re-reading the archives Spark ships
-(``$SPARK_HOME/python``, ``$SPARK_HOME/jars``). These tests fail, rather than
-pass on the stock cost, if pyspark moves the call or a worker runs without
-the wrapper, and they check that ``addPyFile`` still reaches the workers.
+``wikicrawler_spark`` inside a task makes that skip re-reading the archives
+Spark ships (``$SPARK_HOME/python``, ``$SPARK_HOME/jars``). These tests fail,
+rather than pass on the stock cost, if pyspark moves the call or a worker
+runs without the wrapper, and they check that ``addPyFile`` still reaches
+the workers.
 """
 
 from __future__ import annotations
@@ -21,24 +22,32 @@ import zipimport
 import pyarrow as pa
 
 import wikicrawler_spark
+from wikicrawler_spark.corpus import corpus_df
+from wikicrawler_spark.kernel import extract_spans
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _hooked(spark, n_tasks):
     """Per row of an ``n_tasks``-task stage: whether the worker runs the
-    package's wrapper once the package is imported."""
+    package's wrapper once the package is imported, and whether a reload
+    of the package keeps that one wrapper."""
     def run(batches):
+        import importlib
         import zipimport
 
-        import wikicrawler_spark  # noqa: F401  (what every package task imports)
+        import wikicrawler_spark  # what every package task imports
 
-        hooked = getattr(zipimport.zipimporter.invalidate_caches,
-                         "keeps_spark_archives", False)
+        wrapper = zipimport.zipimporter.invalidate_caches
+        hooked = getattr(wrapper, "keeps_spark_archives", False)
+        importlib.reload(wikicrawler_spark)
+        once = zipimport.zipimporter.invalidate_caches is wrapper
         for b in batches:
-            yield pa.RecordBatch.from_pydict({"hooked": [hooked] * b.num_rows})
-    rows = spark.range(0, 2 * n_tasks, 1, n_tasks).mapInArrow(run, "hooked boolean").collect()
-    return [r.hooked for r in rows]
+            yield pa.RecordBatch.from_pydict({"hooked": [hooked] * b.num_rows,
+                                              "once": [once] * b.num_rows})
+    rows = (spark.range(0, 2 * n_tasks, 1, n_tasks)
+            .mapInArrow(run, "hooked boolean, once boolean").collect())
+    return [(r.hooked, r.once) for r in rows]
 
 
 def _import_value(module):
@@ -60,21 +69,23 @@ def test_pyspark_still_invalidates_in_task_setup():
 
 
 def test_session_workers_run_the_wrapper(spark):
-    assert _hooked(spark, 4) == [True] * 8
-    assert zipimport.zipimporter.invalidate_caches.keeps_spark_archives
+    """Session workers run the wrapper, once per process; the driver, which
+    runs no task, keeps the stock method."""
+    assert _hooked(spark, 4) == [(True, True)] * 8
+    assert not hasattr(zipimport.zipimporter.invalidate_caches, "keeps_spark_archives")
 
 
-def test_reimport_wraps_once():
-    import importlib
-
-    before = zipimport.zipimporter.invalidate_caches
-    importlib.reload(wikicrawler_spark)
-    assert zipimport.zipimporter.invalidate_caches is before
-
-
-def test_only_spark_archives_keep_their_directory(tmp_path):
+def test_only_spark_archives_keep_their_directory(tmp_path, monkeypatch):
     """The wrapper keeps the directory of Spark's own ``pyspark.zip`` and
-    still re-reads an archive anywhere else."""
+    still re-reads an archive anywhere else. Installing it twice keeps the
+    first wrapper."""
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        zipimport.zipimporter.invalidate_caches)  # restored after
+    wikicrawler_spark._keep_spark_archives()
+    wrapper = zipimport.zipimporter.invalidate_caches
+    wikicrawler_spark._keep_spark_archives()
+    assert zipimport.zipimporter.invalidate_caches is wrapper
+
     spark_zip = os.path.join(os.environ["SPARK_HOME"], "python", "lib", "pyspark.zip")
     kept = zipimport.zipimporter(spark_zip)
     files = kept._files
@@ -140,9 +151,12 @@ def test_reused_worker_keeps_the_pyspark_zip_directory():
 
 def test_add_py_file_mid_session(spark, tmp_path):
     """After the workers ran a package task, a ``.py`` and then a ``.zip``
-    added with ``addPyFile`` are importable by the next task."""
+    added with ``addPyFile`` are importable by the next task. This checks
+    ``addPyFile`` end to end with the wrapper installed; it does not isolate
+    the SparkFiles directory's invalidation, since a ``FileFinder`` also
+    refreshes when its directory's mtime changes."""
     sc = spark.sparkContext
-    assert _hooked(spark, 4) == [True] * 8
+    extract_spans(corpus_df(spark, 8, partitions=4)).collect()  # a package task
 
     tag = uuid.uuid4().hex[:12]
     plain = f"wcs_added_py_{tag}"

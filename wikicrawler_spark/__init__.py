@@ -27,6 +27,8 @@ Layout (mirrors SURVEY.md §7):
 import os
 import zipimport
 
+from pyspark.taskcontext import TaskContext
+
 __version__ = "0.1.0"
 
 
@@ -46,8 +48,11 @@ def _keep_spark_archives() -> None:
     directory finder is invalidated as before.
 
     Every worker that unpickles a package function imports this module
-    first, so the narrowing is in place from a worker's second task on.
-    It wraps the method once per process; a forked worker inherits it.
+    first, inside the task, so the narrowing is in place from a worker's
+    second task on. It is installed only there (see the bottom of this
+    module): a driver or any other program importing the package keeps
+    the stock behaviour. It wraps the method once per process; a
+    re-import keeps the one wrapper.
     """
     stock = zipimport.zipimporter.invalidate_caches
     if getattr(stock, "keeps_spark_archives", False):
@@ -65,4 +70,5 @@ def _keep_spark_archives() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-_keep_spark_archives()
+if TaskContext.get() is not None:  # a Python worker running a task
+    _keep_spark_archives()

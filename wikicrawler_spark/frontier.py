@@ -52,11 +52,9 @@ Scale design notes:
     merge rather than in a prologue of its own.
   * The kernel stage runs at most one round of tasks: no more tasks than
     ``num_partitions``, the session's cores, or one per 4 frontier docs.
-    Each task still pays a fixed cost: its launch, the kernel closure's
-    unpickle, the Arrow stream setup and one ``spans`` part file (a fresh
-    worker's first task also re-reads Spark's archives, see the package
-    ``__init__``). The per-task archive re-read is gone, so the cap's
-    gain has not been re-measured since.
+    Each task still pays a fixed cost (its launch, the kernel closure's
+    unpickle, the Arrow stream setup) and writes one ``spans`` part file,
+    so the cap bounds a wave's checkpoint files by the session's cores.
   * The wave anti-joins its candidates against ``visited ∪ frontier``; the
     Union carries no partitioning, so that join broadcasts or shuffles
     both sides whatever the layout of the visited files.
